@@ -56,6 +56,56 @@ def test_minhash_finds_exact_and_near_dups(spark, docs):
     assert not any(3 in p or 4 in p for p in got)
 
 
+def test_minhash_signatures_rowwise_matches_explode_reference(spark, docs):
+    """The shuffle-free rowwise signature equals an explode +
+    groupBy(doc) reference over independently computed shingles:
+    mh_i = min(xxhash64(xxhash64(shingle), i)), hset = the set of base
+    hashes, sz = its size — including a doc with fewer than 3 tokens
+    (its full text is its one shingle) and one whose grams repeat."""
+    import re as _re
+
+    from xetl_spark.operators.dedup import minhash_signatures_rowwise
+
+    extra = spark.createDataFrame(
+        [(10, "Two words"), (11, "repeat Repeat repeat REPEAT")],
+        "doc_id long, text string",
+    )
+    both = docs.union(extra)
+    k = 6
+    got = {
+        r.doc: r.asDict()
+        for r in minhash_signatures_rowwise(both, "text", "doc_id", num_hashes=k).collect()
+    }
+
+    def py_shingles(text):
+        toks = [t for t in _re.split(r"[^a-z0-9]+", text.lower()) if t]
+        if len(toks) < 3:
+            return {" ".join(toks)}
+        return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+
+    sh = spark.createDataFrame(
+        [(r.doc_id, g) for r in both.collect() for g in py_shingles(r.text)],
+        "doc long, shingle string",
+    )
+    h = F.xxhash64("shingle")
+    ref = {
+        r.doc: r.asDict()
+        for r in sh.groupBy("doc")
+        .agg(
+            *[F.min(F.xxhash64(h, F.lit(i))).alias(f"mh_{i}") for i in range(k)],
+            F.collect_set(h).alias("hset"),
+            F.count("*").alias("sz"),
+        )
+        .collect()
+    }
+    assert set(got) == set(ref) == {0, 1, 2, 3, 4, 10, 11}
+    assert ref[10]["sz"] == 1 and ref[11]["sz"] == 1
+    for d, r in ref.items():
+        g = got[d]
+        assert sorted(g.pop("hset")) == sorted(r.pop("hset")), d
+        assert g == r, d
+
+
 def test_minhash_giant_doc_routes_to_explode_verify(spark):
     """The verify-path auto-switch: pairs touching a doc with more
     shingle hashes than max_hset_size verify via the explode-join
@@ -195,6 +245,32 @@ def test_hamming_blocking_recall_at_query_radius(spark):
     }
     assert truth >= set(planted)  # sanity: planting really is in-radius
     assert got == truth  # complete (100% recall) and exact (no FPs)
+
+
+def test_sql_string_operators_quote_backtick_column_names(spark, docs):
+    """Operators that interpolate column names into SQL strings take
+    any top-level name verbatim: a backtick, a space or a dot in the
+    name must neither break the parse nor resolve elsewhere. Results
+    equal the plainly named run."""
+    from xetl_spark.operators.dedup import hamming_near_pairs, simhash_rowwise
+    from xetl_spark.operators.text import c4_line_filter
+
+    txt, did, fp = "my`text col", "doc.id", "f`p"
+    odd = docs.select(F.col("doc_id").alias(did), F.col("text").alias(txt))
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(shingles(odd, txt, did)) == rows(shingles(docs, "text", "doc_id"))
+    fps = simhash_rowwise(docs, "text", "doc_id")
+    assert rows(simhash_rowwise(odd, txt, did)) == rows(fps)
+    assert rows(c4_line_filter(odd, txt, did, min_sentences=0)) == rows(
+        c4_line_filter(docs, "text", "doc_id", min_sentences=0)
+    )
+    odd_fps = fps.select(F.col("doc").alias(did), F.col("simhash").alias(fp))
+    near = rows(hamming_near_pairs(fps, "simhash", "doc"))
+    assert (0, 1, 0) in near
+    assert rows(hamming_near_pairs(odd_fps, fp, did)) == near
 
 
 def test_ann_recall_vs_bruteforce(spark, sf_dir):
@@ -572,7 +648,11 @@ def test_repetition_signals_shuffle_free(spark):
 
 def test_repetition_signals_matches_python_reference(spark):
     """Property: on randomized multi-line docs (repeats planted), every
-    integer signal matches an independent pure-Python reference."""
+    integer signal matches an independent pure-Python reference —
+    including the edge semantics: NULL text (NULL signals, total_chars
+    0), empty text, tab-bearing lines (trim strips spaces only, so a
+    leading tab survives), multi-byte characters (line byte lengths vs
+    gram code-point lengths) and a degenerate one-token loop."""
     import random
     import re as _re
     from collections import Counter
@@ -580,8 +660,14 @@ def test_repetition_signals_matches_python_reference(spark):
     from xetl_spark.operators.text import repetition_signals
 
     rng = random.Random(99)
-    vocab = [f"w{i}" for i in range(12)] + ["the", "and"]
-    docs = []
+    vocab = [f"w{i}" for i in range(12)] + ["the", "and", "héé", "日本"]
+    docs = [
+        (100, None),
+        (101, ""),
+        (102, "a\tb\nc  d\n\n  "),
+        (103, "x " * 30),
+        (104, "\tlead tab\n lead tab\n\tlead tab\nlead tab"),
+    ]
     for i in range(40):
         lines = []
         for _ in range(rng.randrange(0, 8)):
@@ -596,9 +682,11 @@ def test_repetition_signals_matches_python_reference(spark):
         for r in repetition_signals(df, "text", "doc_id").collect()
     }
 
-    def ref(textv: str) -> dict:
+    def ref(textv: str | None) -> dict:
+        if textv is None:
+            return {k: 0 if k == "total_chars" else None for k in ref("")}
         toks = [t for t in _re.split(r"[^a-z0-9]+", textv.lower()) if t]
-        lines = [l.strip() for l in textv.split("\n") if l.strip()]
+        lines = [l.strip(" ") for l in textv.split("\n") if l.strip(" ")]
         lc = Counter(lines)
         out = {
             "n_tokens": len(toks),
@@ -623,56 +711,15 @@ def test_repetition_signals_matches_python_reference(spark):
                 out[f"dup_{n}gram_chars"] = dup
         return out
 
+    assert set(got) == {i for i, _ in docs}
     for i, textv in docs:
         expect = ref(textv)
+        assert len(expect) == 13
         for k, v in expect.items():
             assert got[i][k] == v, (i, k, got[i][k], v)
-
-
-def test_repetition_signals_engine_parity(spark):
-    """The Arrow engine (r14 default) and the Catalyst expression
-    engine must agree row-for-row on every signal, including the edge
-    semantics: NULL text, empty text, tab-bearing lines (F.trim strips
-    spaces only), multi-byte characters (line byte lengths vs gram
-    code-point lengths), and planted duplicate lines/grams."""
-    from xetl_spark.operators.text import repetition_signals
-
-    import random
-
-    rng = random.Random(7)
-    vocab = [f"w{i}" for i in range(10)] + ["the", "and", "héé", "日本"]
-    docs = [
-        (100, None),
-        (101, ""),
-        (102, "a\tb\nc  d\n\n  "),
-        (103, "x " * 30),
-    ]
-    for i in range(30):
-        lines = []
-        for _ in range(rng.randrange(0, 7)):
-            line = " ".join(
-                rng.choice(vocab) for _ in range(rng.randrange(1, 10))
-            )
-            lines.append(line)
-            if rng.random() < 0.4:
-                lines.append(line)
-        docs.append((i, "\n".join(lines)))
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    a = {
-        r["doc_id"]: r.asDict()
-        for r in repetition_signals(
-            df, "text", "doc_id", engine="arrow"
-        ).collect()
-    }
-    c = {
-        r["doc_id"]: r.asDict()
-        for r in repetition_signals(
-            df, "text", "doc_id", engine="catalyst"
-        ).collect()
-    }
-    assert set(a) == set(c)
-    for i in a:
-        assert a[i] == c[i], (i, a[i], c[i])
+    # the leading-tab line is distinct from its space-led twin: " lead
+    # tab" trims to "lead tab", "\tlead tab" does not
+    assert (got[104]["n_lines"], got[104]["dup_line_count"]) == (4, 2)
 
 
 def test_c4_line_filter_rules(spark):

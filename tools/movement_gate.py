@@ -16,6 +16,10 @@ Bounds are ~2x the r15 measured values at sf0.1 (below, in the table)
 that a regression to a corpus-sized re-shuffle (the failure mode the
 allowances could hide: 10-100x movement) trips immediately.
 
+The bounds hold only for the fixture they were calibrated on: a
+``sf_dir`` whose table row counts differ from the sf0.1 fixture's is
+refused (exit 2) rather than judged against the wrong bounds.
+
 Usage: python tools/movement_gate.py [sf_dir] [query ...]
 Exit code = number of queries over their bound.
 """
@@ -46,6 +50,18 @@ BOUNDS_SF01: dict[str, tuple[float, float]] = {
     "q_dedup_incremental_semantic": (5.0, 2.46),
 }
 
+# row counts of the sf0.1 fixture the bounds were measured on
+CALIBRATION_ROWS = {
+    "lineitem": 600_000,
+    "orders": 150_000,
+    "documents": 5_000,
+    "events": 100_000,
+}
+
+# the status store lags job completion; poll until it stops changing
+SETTLE_POLL_S = 0.1
+SETTLE_TIMEOUT_S = 30.0
+
 
 def _stages(ui: str, app: str) -> dict:
     with urllib.request.urlopen(
@@ -54,9 +70,46 @@ def _stages(ui: str, app: str) -> dict:
         return {(s["stageId"], s["attemptId"]): s for s in json.load(r)}
 
 
+def _settled_stages(ui: str, app: str) -> dict:
+    """Completed stages once two consecutive reads agree; raises after
+    SETTLE_TIMEOUT_S if the set never stops changing."""
+    deadline = time.monotonic() + SETTLE_TIMEOUT_S
+    prev = _stages(ui, app)
+    while True:
+        time.sleep(SETTLE_POLL_S)
+        cur = _stages(ui, app)
+        if cur == prev:
+            return cur
+        if time.monotonic() > deadline:
+            raise RuntimeError(
+                f"completed-stage set still changing after {SETTLE_TIMEOUT_S}s"
+            )
+        prev = cur
+
+
+def _calibration_mismatch(sf_dir: str) -> list[str]:
+    import pyarrow.parquet as pq
+
+    out = []
+    for table, rows in CALIBRATION_ROWS.items():
+        path = os.path.join(sf_dir, f"{table}.parquet")
+        got = pq.ParquetFile(path).metadata.num_rows if os.path.exists(path) else None
+        if got != rows:
+            out.append(f"{table}: {got} rows, calibrated on {rows}")
+    return out
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     only = set(sys.argv[2:])
+    mismatch = _calibration_mismatch(sf_dir)
+    if mismatch:
+        print(
+            f"movement_gate: {sf_dir} is not the sf0.1 fixture the bounds "
+            "were calibrated on:\n  " + "\n  ".join(mismatch),
+            file=sys.stderr,
+        )
+        return 2
     import xetl_spark.queries as Q
     from xetl_spark.session import get_session
 
@@ -82,8 +135,7 @@ def main() -> int:
         except Exception as exc:  # noqa: BLE001
             failures.append(f"{name}: FAILED to run: {exc}")
             continue
-        time.sleep(0.3)  # let the status store settle
-        after = _stages(ui, app)
+        after = _settled_stages(ui, app)
         new = [s for k, s in after.items() if k not in before]
         sw_mb = sum(s.get("shuffleWriteBytes", 0) for s in new) / 1e6
         verdict = "ok" if sw_mb <= bound_mb else "OVER BOUND"

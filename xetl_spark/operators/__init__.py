@@ -1,8 +1,11 @@
 """Operator library: composed, scale-aware DataFrame transforms.
 
-Everything here is built from JVM-side Catalyst expressions (no
-row-at-a-time Python UDFs); Pandas UDFs appear only in the multimodal
-decode path where real codec work would happen.
+Operators are JVM-side Catalyst expressions or Arrow-batched Python
+passes (mapInPandas / applyInPandas / pandas_udf), never row-at-a-time
+Python UDFs. The Arrow passes carry per-document work that batch
+Python does faster than interpreted expression chains (e.g.
+text.repetition_signals, BPE, graph and ANN kernels) and the codec /
+document-format decoders.
 """
 
 from xetl_spark.operators.relational import (  # noqa: F401
@@ -36,7 +39,6 @@ from xetl_spark.operators.asof import asof_join, range_join  # noqa: F401
 from xetl_spark.operators.dedup import (  # noqa: F401
     contamination_check,
     exact_dedup,
-    minhash_signatures,
     lsh_candidate_pairs,
     minhash_near_duplicates,
     pair_jaccard,

@@ -4,6 +4,12 @@ All stages are pure Catalyst expressions (xxhash64, explode, groupBy) —
 no Python in the hot path — so the same code scales from the 500-row
 fixture to a 100 TB corpus: candidate generation is bucket-local
 (band-hash equi-joins), never an O(n²) cross product.
+
+The operators that build SQL strings (shingles,
+minhash_signatures_rowwise, simhash, simhash_rowwise,
+hamming_near_pairs) take top-level column names, quoted verbatim: a
+name with dots, spaces or backticks is one column, never a struct
+field path (``util.sql_ident``).
 """
 
 from __future__ import annotations
@@ -12,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xetl_spark.operators.relational import dedup_keep_first
-from xetl_spark.operators.util import ensure_parallelism
+from xetl_spark.operators.util import ensure_parallelism, sql_ident
 
 
 def exact_dedup(
@@ -56,23 +62,6 @@ def incremental_exact_dedup(
     return fresh.drop("__h"), new_seen
 
 
-def _tokens(text_col: str):
-    """Lowercased alphanumeric word tokens.
-
-    One regex pass: splitting on runs of non-alphanumerics is
-    equivalent to replace-nonalnum-with-space → trim → split-on-ws,
-    but ~4× cheaper (regexp_replace rewrites the whole string char by
-    char; split scans once). The filter drops the empty fragments a
-    leading/trailing separator produces — and with them the single ""
-    token the old form emitted for empty/whitespace-only documents,
-    which contributed a meaningless shared shingle.
-    """
-    return F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-        lambda x: x != F.lit(""),
-    )
-
-
 def _ngram_array(toks, n: int, short_doc_fallback: bool = True):
     """Word n-grams via a zip_with chain over shifted views.
 
@@ -106,11 +95,19 @@ def _ngram_array(toks, n: int, short_doc_fallback: bool = True):
 
 
 def _tokens_sql(text_col: str) -> str:
-    """SQL-string twin of ``_tokens`` — same functions, same pattern,
-    parsed server-side in one call instead of built through per-node
-    Py4J round trips (~30 ms/build measured; see
-    minhash_signatures_rowwise for why that matters)."""
-    return f"filter(split(lower(`{text_col}`), '[^a-z0-9]+'), x -> x != '')"
+    """SQL expression for the lowercased alphanumeric word tokens of
+    ``text_col``.
+
+    One regex pass: splitting on runs of non-alphanumerics is
+    equivalent to replace-nonalnum-with-space → trim → split-on-ws,
+    but ~4× cheaper (regexp_replace rewrites the whole string char by
+    char; split scans once). The filter drops the empty fragments a
+    leading/trailing separator produces, so empty/whitespace-only
+    documents have no tokens. A SQL string parsed server-side in one
+    call instead of built through per-node Py4J round trips (~30
+    ms/build measured; see minhash_signatures_rowwise for why that
+    matters)."""
+    return f"filter(split(lower({sql_ident(text_col)}), '[^a-z0-9]+'), x -> x != '')"
 
 
 def _ngram_array_sql(toks_sql: str, n: int, short_doc_fallback: bool = True) -> str:
@@ -146,47 +143,11 @@ def shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame
     minhash_signatures_rowwise).
     """
     return ensure_parallelism(df).select(
-        F.col(id_col).alias("doc"),
+        F.col(sql_ident(id_col)).alias("doc"),
         F.explode(
             F.expr(f"array_distinct({_ngram_array_sql(_tokens_sql(text_col), n)})")
         ).alias("shingle"),
     )
-
-
-def minhash_signatures(
-    sh: DataFrame, num_hashes: int = 24, with_hash_set: bool = False
-) -> DataFrame:
-    """Per-doc MinHash signature: min over shingles of the i-th derived
-    hash, plus the shingle-set size.
-
-    Each shingle STRING is hashed exactly once (``xxhash64(shingle)``);
-    the ``num_hashes`` independent hash functions are then derived by
-    re-hashing that 8-byte value with the seed i. Hashing a fixed-width
-    long is ~len(shingle)/8 cheaper than hashing the string per seed,
-    which cuts the dominant per-row cost of the whole MinHash pipeline
-    (measured ~2x on the signature stage) without changing collision
-    statistics — xxhash64 over (h, i) is as uniform as over (s, i).
-
-    A single groupBy(doc) computes all ``num_hashes`` mins AND the set
-    size map-side (partial aggregation), so the shuffle carries one row
-    per doc and downstream jaccard verification needs no second pass
-    over the exploded shingle table.
-
-    ``with_hash_set=True`` additionally carries the full set of 64-bit
-    base hashes (``hset``) in the same aggregation, enabling exact
-    Jaccard verification of candidate pairs from the signature table
-    alone (see pair_jaccard_hashed) — trading ~8 bytes/shingle of
-    shuffle payload for eliminating two joins against the exploded
-    shingle table.
-    """
-    base = sh.select("doc", F.xxhash64(F.col("shingle")).alias("__h"))
-    aggs = [
-        F.min(F.xxhash64(F.col("__h"), F.lit(i))).alias(f"mh_{i}")
-        for i in range(num_hashes)
-    ]
-    if with_hash_set:
-        aggs.append(F.collect_set(F.col("__h")).alias("hset"))
-    return base.groupBy("doc").agg(*aggs, F.count("*").alias("sz"))
 
 
 def minhash_signatures_rowwise(
@@ -196,13 +157,18 @@ def minhash_signatures_rowwise(
     shuffle: a document's shingles are already co-located in its own
     row, so tokenize → n-gram → distinct → hash → 24 array_min's all
     run as higher-order array expressions inside one whole-stage
-    codegen span. Emits the same (doc, mh_0..mh_{k-1}, hset, sz) as
-    minhash_signatures(with_hash_set=True) with bit-identical values
-    (same xxhash64(shingle) base, same xxhash64(h, i) derivation) —
-    but the plan is a pure map: at 100 TB this removes the shuffle of
-    the exploded shingle table (≈ 50× the corpus row count) entirely;
-    the first exchange in the whole dedup pipeline is the tiny banded
-    signature table.
+    codegen span. Emits (doc, mh_0..mh_{k-1}, hset, sz): ``hset`` is
+    the set of base hashes ``xxhash64(shingle)`` over the doc's
+    distinct shingles, ``sz`` its size, and ``mh_i`` = min over
+    ``hset`` of ``xxhash64(h, i)`` — each shingle string is hashed
+    once and the k hash functions are derived by re-hashing that
+    8-byte value with seed i (~len(shingle)/8 cheaper than hashing the
+    string per seed, same collision statistics). The plan is a pure
+    map: at 100 TB this removes the shuffle of an exploded shingle
+    table (≈ 50× the corpus row count) entirely; the first exchange
+    in the whole dedup pipeline is the tiny banded signature table.
+    ``hset`` also lets pair_jaccard_hashed verify candidate pairs
+    exactly from the signature table alone.
 
     Higher-order lambdas run interpreted (no whole-stage codegen), so
     the per-element constant dominates: computing the k mins as k
@@ -218,8 +184,8 @@ def minhash_signatures_rowwise(
     assembling this tree through the Python Column API costs ~300 ms
     of driver-side Py4J round trips PER CALL (measured — ~40% of the
     whole q_dedup_minhash_lsh wall at sf0.1), while ``F.expr`` ships
-    one string. Bit-identical values: the SQL names the exact same
-    functions (pinned by the rowwise-vs-explode parity test).
+    one string. Values are pinned against an explode + groupBy(doc)
+    reference in the tests.
     """
     hset_sql = (
         "array_distinct(transform("
@@ -227,7 +193,7 @@ def minhash_signatures_rowwise(
         + ", g -> xxhash64(g)))"
     )
     base = ensure_parallelism(df).select(
-        F.col(id_col).alias("doc"), F.expr(hset_sql).alias("hset")
+        F.col(sql_ident(id_col)).alias("doc"), F.expr(hset_sql).alias("hset")
     )
     mins_sql = (
         f"aggregate(hset, array_repeat({2**63 - 1}, {num_hashes}), "
@@ -238,8 +204,7 @@ def minhash_signatures_rowwise(
         "doc", F.expr(mins_sql).alias("mins"), "hset", F.size("hset").alias("sz")
     )
     # mh_i columns extracted from the materialized fold — cheap
-    # attribute+element_at projections, for band-key construction and
-    # API parity with minhash_signatures
+    # attribute+element_at projections, for band-key construction
     return folded.selectExpr(
         "doc",
         *[f"element_at(mins, {i + 1}) AS mh_{i}" for i in range(num_hashes)],
@@ -308,8 +273,8 @@ def pair_jaccard(
 
     intersection via double equi-join on shingle restricted to candidate
     docs; union = |A| + |B| - |A∩B|. Everything keyed, everything
-    shuffle-local. Pass ``sizes`` (doc, sz) — e.g. from
-    minhash_signatures — to skip recomputing set sizes.
+    shuffle-local. Pass ``sizes`` (doc, sz) — e.g. the
+    minhash_signatures_rowwise table — to skip recomputing set sizes.
     """
     if sizes is None:
         sizes = sh.groupBy("doc").agg(F.count("*").alias("sz"))
@@ -347,7 +312,7 @@ def pair_jaccard_hashed(pairs: DataFrame, sets: DataFrame) -> DataFrame:
     """Exact Jaccard for candidate pairs from per-doc shingle-hash sets.
 
     ``sets`` is (doc, hset: array<long>, sz) — one row per doc (from
-    minhash_signatures(with_hash_set=True)). Two equi-joins on doc id
+    minhash_signatures_rowwise). Two equi-joins on doc id
     (uniform key, no skew) bring both arrays onto the pair row;
     intersection is ``array_intersect`` in whole-stage codegen. "Exact"
     up to 64-bit hash collisions (~n²/2⁶⁵ — negligible, and the MinHash
@@ -523,7 +488,8 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 64) -> DataFr
     fingerprint is assembled with shifts; sign(sum) > 0 sets the bit.
     """
     tok = ensure_parallelism(df).select(
-        F.col(id_col).alias("doc"), F.explode(_tokens(text_col)).alias("t")
+        F.col(sql_ident(id_col)).alias("doc"),
+        F.explode(F.expr(_tokens_sql(text_col))).alias("t"),
     ).withColumn("h", F.xxhash64("t"))
     bit_sums = tok.groupBy("doc").agg(
         *[
@@ -572,7 +538,7 @@ def simhash_rowwise(
     hs_sql = f"transform({_tokens_sql(text_col)}, t -> xxhash64(t))"
     base = (
         ensure_parallelism(df)
-        .select(F.col(id_col).alias("doc"), F.expr(hs_sql).alias("__hs"))
+        .select(F.col(sql_ident(id_col)).alias("doc"), F.expr(hs_sql).alias("__hs"))
         .filter(F.size("__hs") > 0)
     )
     # getbit(h, i) == (h >> i) & 1 (two's-complement), and unlike
@@ -626,12 +592,12 @@ def hamming_near_pairs(
     # minhash_signatures_rowwise): same shiftrightunsigned/AND values
     blocks_sql = "array(" + ", ".join(
         f"struct({c} AS blk, "
-        f"shiftrightunsigned(`{fp_col}`, {c * width}) & {(1 << width) - 1} AS bval)"
+        f"shiftrightunsigned({sql_ident(fp_col)}, {c * width}) & {(1 << width) - 1} AS bval)"
         for c in range(chunks)
     ) + ")"
     blocked = fps.select(
-        F.col(id_col).alias("doc"),
-        F.col(fp_col).alias("__fp"),
+        F.col(sql_ident(id_col)).alias("doc"),
+        F.col(sql_ident(fp_col)).alias("__fp"),
         F.explode(F.expr(blocks_sql)).alias("bc"),
     ).select("doc", "__fp", "bc.blk", "bc.bval")
     buckets = (

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from xetl_spark.operators.util import ensure_parallelism
+from xetl_spark.operators.util import ensure_parallelism, sql_ident
 
 # tiny public stopword seed lists (heuristic language ID, not a model)
 # Seed stopword tables for the stopword-vote language ID and the
@@ -501,7 +501,8 @@ def chunk_text(df, text_col: str, id_col: str, chunk_tokens: int = 64, overlap: 
     # measured 430 s for 100×20k-token docs, ~L²/step). Referencing
     # the bound attribute is O(1) per element, and the Generate
     # (posexplode) boundary keeps view re-analysis from re-inlining
-    # the alias (unlike plain Project chains — see _sorted_run_scalars).
+    # the alias (plain Project chains do not: createOrReplaceTempView →
+    # spark.sql re-inlines a materialized alias into every reference).
     base = ensure_parallelism(df).select(
         F.col(id_col).alias("doc"), tokens(text_col).alias("__t")
     )
@@ -533,82 +534,55 @@ def repetition_score(text: Column | str, n: int = 3) -> Column:
     )
 
 
-def _sorted_run_scalars(arr: Column | str, char_len) -> Column:
-    """struct(top, dup) over a SORTED array: ``top`` = the largest
-    cover (occurrence count × char_len(element)) of any distinct
-    element, ``dup`` = Σ cover over elements occurring more than once.
-    Runs of equal elements are contiguous under any total order, so no
-    per-element histogram (and no shuffle) is ever needed.
-
-    ONE ``aggregate`` pass carrying (prev, cnt, top, dup) state — the
-    input array is referenced exactly once. An earlier form
-    run-length-encoded via index arrays whose lambdas read the array
-    through ``element_at`` O(L) times behind a materialized alias;
-    that survives one analysis pass (CollapseProject declines to
-    inline a non-cheap alias referenced more than once) but NOT view
-    re-analysis (createOrReplaceTempView → spark.sql, the `sql`
-    builtin task's path), which re-inlines the alias into every
-    element_at — re-deriving the whole upstream chain per ELEMENT,
-    O(L²) per document (measured 60×+ on the declarative surface).
-    The fold is immune: fully inlined, the chain still evaluates once
-    per row under any analyzer."""
-    c = F.col(arr) if isinstance(arr, str) else arr
-    zero = F.lit(0).cast("long")
-
-    def _st(prev, cnt, top, dup):
-        return F.struct(
-            prev.alias("prev"),
-            cnt.alias("cnt"),
-            top.alias("top"),
-            dup.alias("dup"),
-        )
-
-    def _close(st):
-        # fold the finished run (prev × cnt) into the running scalars
-        cover = st["cnt"] * char_len(st["prev"]).cast("long")
-        return (
-            F.greatest(st["top"], cover),
-            st["dup"] + F.when(st["cnt"] > 1, cover).otherwise(zero),
-        )
-
-    def _merge(st, x):
-        top2, dup2 = _close(st)
-        return (
-            F.when(st["cnt"] == 0, _st(x, F.lit(1).cast("long"), zero, zero))
-            .when(x == st["prev"], _st(x, st["cnt"] + 1, st["top"], st["dup"]))
-            .otherwise(_st(x, F.lit(1).cast("long"), top2, dup2))
-        )
-
-    def _finish(st):
-        top2, dup2 = _close(st)
-        return F.struct(
-            F.when(st["cnt"] > 0, top2).otherwise(zero).alias("top"),
-            F.when(st["cnt"] > 0, dup2).otherwise(zero).alias("dup"),
-        )
-
-    return F.aggregate(c, _st(F.lit(""), zero, zero, zero), _merge, _finish)
-
-
-def _repetition_signals_arrow(
+def repetition_signals(
     df,
     text_col: str,
     id_col: str,
-    top_ns: tuple[int, ...],
-    dup_ns: tuple[int, ...],
+    top_ns: tuple[int, ...] = (2, 3, 4),
+    dup_ns: tuple[int, ...] = (5, 6, 7, 8),
 ):
-    """Arrow engine for ``repetition_signals``: one ``mapInPandas``
-    pass computing every integer signal per document with plain
-    Counters — same map-only / zero-shuffle shape as the Catalyst
-    engine but ~3x faster per core at sf0.1 (the Catalyst version
-    pays 8 array_sorts plus interpreted run-length ``aggregate``
-    lambdas per doc; guide §4.2 — batch native code beats interpreted
-    expression chains). Signal definitions and edge semantics are the
-    Catalyst engine's, pinned by the differential test
-    (tests/test_llm_ops.py): ASCII-run tokenization (equivalent to
-    tokens(): non-[a-z0-9] runs separate tokens), lines trimmed of
-    SPACES only (F.trim semantics), byte lengths for lines
-    (octet_length), code-point lengths for grams, NULL text -> NULL
-    signals with total_chars 0."""
+    """Gopher-style per-document repetition signals (Rae et al. 2021
+    "Scaling Language Models" Table A1 — the filter family FineWeb,
+    Dolma and RefinedWeb all reuse): duplicate-line fractions plus
+    top-/duplicated-n-gram character coverage, the strongest cheap
+    predictors of templated, looping, or boilerplate text.
+
+    Exact definitions (documented because implementations vary):
+
+    - lines: raw text split on ``\\n``, trimmed of SPACES only (Spark
+      ``trim`` semantics — tabs survive), empties dropped;
+      ``dup_line_count`` counts occurrences beyond the first of each
+      repeated line; ``dup_line_chars`` counts bytes (octet_length —
+      engine-portable for non-ASCII) of ALL occurrences of lines that
+      appear more than once; ``line_chars`` is total line bytes.
+    - n-grams: over the lowercased alphanumeric token stream (module
+      tokenizer — non-[a-z0-9] runs separate tokens), strict — a doc
+      with fewer than n tokens has zero n-grams. Gram char length =
+      code-point length of the space-joined gram; ``total_chars`` =
+      length of the space-joined token stream.
+    - ``top_{n}gram_chars`` (n in top_ns): cnt x len of the single
+      distinct n-gram maximizing that product (deterministic, unlike
+      "most frequent" which needs a tiebreak).
+    - ``dup_{n}gram_chars`` (n in dup_ns): sum of cnt x len over
+      distinct n-grams with cnt > 1 (overlap-naive: overlapping
+      occurrences each count, so the ratio to total_chars can exceed
+      1 for degenerate docs — cap downstream if a true fraction is
+      needed).
+    - NULL text gives NULL signals, except ``total_chars`` = 0.
+
+    Returns integer coverage columns plus convenience ``*_frac``
+    doubles (0.0 on empty denominators). Integers hash exactly across
+    engines; fractions are derived, never the comparison surface.
+
+    100 TB plan shape: ZERO shuffles — one Arrow-batched
+    ``mapInPandas`` map stage computing every integer signal per
+    document with plain Counters, no skew surface at all (hot grams
+    are per-document, never cross-partition keys). Batch code beats
+    interpreted expression chains here (guide §4.2): a pure-Catalyst
+    form needs 8 per-doc array_sorts plus interpreted run-length
+    ``aggregate`` lambdas, measured 1.85s vs 0.62s for this pass at
+    sf0.1.
+    """
     import re as _re
     from collections import Counter
 
@@ -627,8 +601,7 @@ def _repetition_signals_arrow(
 
     def _one(s):
         if s is None:
-            # Catalyst parity: null text -> null signals, but
-            # total_chars = length(concat_ws(' ', null)) = 0
+            # total_chars = length(concat_ws(' ', <no tokens>)) = 0
             return (None, 0) + (None,) * (4 + len(top_ns) + len(dup_ns))
         toks = [t for t in tok_re.split(s.lower()) if t]
         total_chars = len(" ".join(toks))
@@ -686,159 +659,9 @@ def _repetition_signals_arrow(
                 out, columns=[id_col] + [c.split(" ")[0] for c in ints]
             )
 
-    return ensure_parallelism(df).select(id_col, text_col).mapInPandas(
+    signals = ensure_parallelism(df).select(id_col, text_col).mapInPandas(
         gen, schema=schema
     )
-
-
-def repetition_signals(
-    df,
-    text_col: str,
-    id_col: str,
-    top_ns: tuple[int, ...] = (2, 3, 4),
-    dup_ns: tuple[int, ...] = (5, 6, 7, 8),
-    engine: str = "arrow",
-):
-    """Gopher-style per-document repetition signals (Rae et al. 2021
-    "Scaling Language Models" Table A1 — the filter family FineWeb,
-    Dolma and RefinedWeb all reuse): duplicate-line fractions plus
-    top-/duplicated-n-gram character coverage, the strongest cheap
-    predictors of templated, looping, or boilerplate text.
-
-    Exact definitions (documented because implementations vary):
-
-    - lines: raw text split on ``\\n``, trimmed, empties dropped;
-      ``dup_line_count`` counts occurrences beyond the first of each
-      repeated line; ``dup_line_chars`` counts bytes (octet_length —
-      engine-portable for non-ASCII) of ALL occurrences of lines that
-      appear more than once; ``line_chars`` is total line bytes.
-    - n-grams: over the lowercased alphanumeric token stream (module
-      tokenizer), strict — a doc with fewer than n tokens has zero
-      n-grams. Gram char length = length of the space-joined gram;
-      ``total_chars`` = length of the space-joined token stream.
-    - ``top_{n}gram_chars`` (n in top_ns): cnt x len of the single
-      distinct n-gram maximizing that product (deterministic, unlike
-      "most frequent" which needs a tiebreak).
-    - ``dup_{n}gram_chars`` (n in dup_ns): sum of cnt x len over
-      distinct n-grams with cnt > 1 (overlap-naive: overlapping
-      occurrences each count, so the ratio to total_chars can exceed
-      1 for degenerate docs — cap downstream if a true fraction is
-      needed).
-
-    Returns integer coverage columns plus convenience ``*_frac``
-    doubles (0.0 on empty denominators). Integers hash exactly across
-    engines; fractions are derived, never the comparison surface.
-
-    100 TB plan shape: ZERO shuffles in either engine — one map stage
-    that streams at scan speed, no skew surface at all (hot grams are
-    per-document, never cross-partition keys).
-
-    ``engine="arrow"`` (default since the r14 optimization round) runs
-    the per-doc signal computation as a single Arrow-batched
-    ``mapInPandas`` pass — measured 1.85s -> 0.62s at sf0.1 vs the
-    Catalyst engine, whose 8 per-doc array_sorts + interpreted
-    run-length ``aggregate`` lambdas dominate (guide §4.2).
-    ``engine="catalyst"`` keeps the pure-expression implementation
-    (usable where a Python runtime is unavailable); the two are pinned
-    identical by a differential test.
-    """
-    if engine == "arrow":
-        ints = _repetition_signals_arrow(df, text_col, id_col, top_ns, dup_ns)
-        return _repetition_fracs(ints, id_col, top_ns, dup_ns)
-    if engine != "catalyst":
-        raise ValueError(f"unknown engine {engine!r}: arrow|catalyst")
-    from xetl_spark.operators.dedup import _ngram_array
-
-    raw = F.col(text_col)
-    toks = F.filter(tokens(text_col), lambda x: x != F.lit(""))
-    lines = F.filter(
-        F.transform(F.split(raw, "\n"), lambda s: F.trim(s)),
-        lambda s: s != F.lit(""),
-    )
-    ns = tuple(dict.fromkeys(tuple(top_ns) + tuple(dup_ns)))  # ordered dedup
-    base = ensure_parallelism(df).select(
-        F.col(id_col).alias("__id"),
-        toks.alias("__t"),
-        lines.alias("__lines"),
-    )
-    # n-gram chains built INCREMENTALLY across materialized projections:
-    # the raw n-gram array extends the (n-1)-gram array by one zip_with,
-    # so max_n-1 array walks total instead of sum(n-1) per independent
-    # _ngram_array calls (7 vs 28 at the default ns) — each __r{n} is a
-    # real column, so the next step reads an attribute, never re-derives
-    # the whole prefix chain (the CollapseProject discipline again).
-    # Raw chains carry the zip_with null padding; the per-n filter below
-    # reproduces _ngram_array(short_doc_fallback=False) exactly.
-    max_n = max(ns)
-    chained = base
-    prev = "__t"
-    for n in range(2, max_n + 1):
-        chained = chained.withColumn(
-            f"__r{n}",
-            F.zip_with(
-                F.col(prev),
-                F.slice("__t", n, 2_000_000),
-                lambda a, b: F.when(
-                    a.isNotNull() & b.isNotNull(), F.concat(a, F.lit(" "), b)
-                ),
-            ),
-        )
-        prev = f"__r{n}"
-    sorted_cols = chained.select(
-        "__id",
-        F.size("__t").alias("n_tokens"),
-        F.length(F.concat_ws(" ", "__t")).cast("long").alias("total_chars"),
-        F.size("__lines").alias("n_lines"),
-        (F.size("__lines") - F.size(F.array_distinct("__lines"))).alias(
-            "dup_line_count"
-        ),
-        F.aggregate(
-            "__lines",
-            F.lit(0).cast("long"),
-            lambda acc, l: acc + F.octet_length(l),
-        ).alias("line_chars"),
-        F.array_sort("__lines").alias("__ls"),
-        *[
-            F.array_sort(
-                F.filter(F.col(f"__r{n}"), lambda x: x.isNotNull())
-            ).alias(f"__g{n}")
-            for n in ns
-        ],
-    )
-    covers = sorted_cols.select(
-        "__id",
-        "n_tokens",
-        "total_chars",
-        "n_lines",
-        "dup_line_count",
-        "line_chars",
-        _sorted_run_scalars("__ls", F.octet_length).alias("__lc"),
-        *[
-            _sorted_run_scalars(f"__g{n}", F.length).alias(f"__c{n}")
-            for n in ns
-        ],
-    )
-    out_cols = [
-        F.col("__id").alias(id_col),
-        "n_tokens",
-        "total_chars",
-        "n_lines",
-        "dup_line_count",
-        "line_chars",
-        F.col("__lc.dup").alias("dup_line_chars"),
-    ]
-    for n in top_ns:
-        out_cols.append(F.col(f"__c{n}.top").alias(f"top_{n}gram_chars"))
-    for n in dup_ns:
-        out_cols.append(F.col(f"__c{n}.dup").alias(f"dup_{n}gram_chars"))
-    ints = covers.select(*out_cols)
-    return _repetition_fracs(ints, id_col, top_ns, dup_ns)
-
-
-def _repetition_fracs(ints, id_col, top_ns, dup_ns):
-    """Attach the derived ``*_frac`` doubles (0.0 on empty
-    denominators) to the integer signal table — shared by both
-    repetition_signals engines."""
 
     def _frac(num: str, den: str) -> Column:
         return F.when(
@@ -861,7 +684,7 @@ def _repetition_fracs(ints, id_col, top_ns, dup_ns):
             for n in dup_ns
         ],
     ]
-    return ints.select("*", *frac_cols)
+    return signals.select("*", *frac_cols)
 
 
 def c4_line_filter(df, text_col: str, id_col: str, min_sentences: int = 5):
@@ -884,17 +707,20 @@ def c4_line_filter(df, text_col: str, id_col: str, min_sentences: int = 5):
     has_brace, keep_doc, clean_text) — one row per input document,
     ``clean_text`` = surviving lines joined with ``\\n``.
 
+    ``text_col`` and ``id_col`` are top-level column names, quoted
+    verbatim into the SQL (dots, spaces and backticks included).
+
     100 TB plan shape: zero shuffles — every rule is a higher-order
     expression over the document's own line array; the operator is
     one map stage at scan speed.
     """
-    raw = F.col(text_col)
+    raw = F.col(sql_ident(text_col))
     # SQL-string construction (one server-side parse — see
     # minhash_signatures_rowwise): the two lambda filters cost ~150 ms
     # of driver-side Py4J build per call through the Column API (r15);
     # values identical, pinned by the q_text_c4_rules oracle hash
     lines_sql = (
-        f"filter(transform(split(`{text_col}`, '\\n'), s -> trim(s)), "
+        f"filter(transform(split({sql_ident(text_col)}, '\\n'), s -> trim(s)), "
         "s -> s != '')"
     )
     kept_sql = (
@@ -904,7 +730,7 @@ def c4_line_filter(df, text_col: str, id_col: str, min_sentences: int = 5):
         "AND NOT contains(lower(s), 'javascript'))"
     )
     base = ensure_parallelism(df).select(
-        F.col(id_col).alias("__id"),
+        F.col(sql_ident(id_col)).alias("__id"),
         F.lower(raw).contains("lorem ipsum").alias("has_lorem"),
         raw.contains("{").alias("has_brace"),
         F.expr(lines_sql).alias("__lines"),
@@ -2067,21 +1893,14 @@ def ngram_novelty(df, text_col: str, id_col: str, n: int = 3):
     with ≥1 n-gram; short docs fall back to their full text as one
     shingle (the shingling convention).
     """
-    from xetl_spark.operators.dedup import _ngram_array, _tokens
+    from xetl_spark.operators.dedup import shingles
 
-    grams = (
-        ensure_parallelism(df)
-        .select(
-            F.col(id_col).alias("doc"),
-            F.explode(
-                F.array_distinct(_ngram_array(_tokens(text_col), n))
-            ).alias("gram"),
-        )
-        .filter(F.col("gram") != "")  # token-free docs have no grams
+    grams = shingles(df, text_col, id_col, n).filter(
+        F.col("shingle") != ""  # token-free docs have no grams
     )
-    dfreq = grams.groupBy("gram").agg(F.count("*").alias("gdf"))
+    dfreq = grams.groupBy("shingle").agg(F.count("*").alias("gdf"))
     return (
-        grams.join(dfreq, "gram")
+        grams.join(dfreq, "shingle")
         .groupBy("doc")
         .agg(
             F.count("*").alias("n_grams"),

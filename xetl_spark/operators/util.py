@@ -5,6 +5,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+def sql_ident(name: str) -> str:
+    """Backtick-quote a top-level column name for interpolation into a
+    SQL string (``F.expr``/``selectExpr``), escaping embedded backticks
+    by doubling them. The name is always ONE identifier: dots are part
+    of it, never struct-field access. Pass the result to ``F.col`` too
+    when the same function also resolves the name through the Column
+    API, so both resolve it identically."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def ensure_parallelism(
     df: DataFrame,
     min_fraction: float = 0.5,

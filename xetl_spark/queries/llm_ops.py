@@ -325,8 +325,9 @@ def q_text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-family repetition quality signals (operators/text.py
     repetition_signals): duplicate-line count/char coverage plus
     top-{2,3,4}-gram and duplicated-{5..8}-gram character coverage per
-    document — shuffle-free (per-doc sorted run-length HOFs), integer
-    outputs for exact cross-engine hashing."""
+    document — shuffle-free (one Arrow-batched mapInPandas map stage
+    counting per document), integer outputs for exact cross-engine
+    hashing."""
     (docs,) = load(spark, sf_dir, "documents")
     out = text.repetition_signals(docs, "text", "doc_id")
     ints = [
