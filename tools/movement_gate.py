@@ -6,10 +6,12 @@ cached subtrees or pins hint-forced exchanges (the count then measures
 plan TEXT, not data movement — the r14 q_dedup_incremental_semantic
 allowance grew 19 -> 30 for identical per-doc movement). This gate
 asserts what the count cannot: the measured shuffle WRITE volume at a
-fixed SF. Each allowance-listed query runs to completion through the
-noop sink; completed-stage deltas from the monitoring REST API are
-summed (the tools/stage_metrics.py method) and compared against the
-declared per-query bound.
+fixed SF. Each allowance-listed query is built and run through the
+noop sink under ``xetl_spark.profile.profile``; the shuffle write of
+the completed stages of its jobs is summed (the tools/stage_metrics.py
+method) and compared against the declared per-query bound. A query
+whose profile holds no completed stage fails: a reader that saw
+nothing must not pass as 0 MB.
 
 Bounds are ~2x the r15 measured values at sf0.1 (below, in the table)
 — loose enough for fixture drift and AQE plan wobble, tight enough
@@ -21,16 +23,14 @@ The bounds hold only for the fixture they were calibrated on: a
 refused (exit 2) rather than judged against the wrong bounds.
 
 Usage: python tools/movement_gate.py [sf_dir] [query ...]
-Exit code = number of queries over their bound.
+Exit code = number of failing queries (over bound, failed to run, or
+no completed stage read).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, "/root/repo")
 
@@ -58,34 +58,6 @@ CALIBRATION_ROWS = {
     "events": 100_000,
 }
 
-# the status store lags job completion; poll until it stops changing
-SETTLE_POLL_S = 0.1
-SETTLE_TIMEOUT_S = 30.0
-
-
-def _stages(ui: str, app: str) -> dict:
-    with urllib.request.urlopen(
-        f"{ui}/api/v1/applications/{app}/stages?status=complete"
-    ) as r:
-        return {(s["stageId"], s["attemptId"]): s for s in json.load(r)}
-
-
-def _settled_stages(ui: str, app: str) -> dict:
-    """Completed stages once two consecutive reads agree; raises after
-    SETTLE_TIMEOUT_S if the set never stops changing."""
-    deadline = time.monotonic() + SETTLE_TIMEOUT_S
-    prev = _stages(ui, app)
-    while True:
-        time.sleep(SETTLE_POLL_S)
-        cur = _stages(ui, app)
-        if cur == prev:
-            return cur
-        if time.monotonic() > deadline:
-            raise RuntimeError(
-                f"completed-stage set still changing after {SETTLE_TIMEOUT_S}s"
-            )
-        prev = cur
-
 
 def _calibration_mismatch(sf_dir: str) -> list[str]:
     import pyarrow.parquet as pq
@@ -111,33 +83,27 @@ def main() -> int:
         )
         return 2
     import xetl_spark.queries as Q
+    from xetl_spark.profile import profile
     from xetl_spark.session import get_session
 
-    spark = get_session(
-        "movement_gate",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4049"},
-    )
-    ui = spark.sparkContext.uiWebUrl
-    if not ui:
-        raise SystemExit("movement_gate needs the monitoring REST API")
-    with urllib.request.urlopen(f"{ui}/api/v1/applications") as r:
-        app = json.load(r)[0]["id"]
+    spark = get_session("movement_gate")
+
+    def run(name: str) -> None:
+        Q.REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     failures: list[str] = []
     for name, (bound_mb, measured_mb) in BOUNDS_SF01.items():
         if only and name not in only:
             continue
-        spark.sparkContext.setJobDescription(f"movement_gate: {name}")
-        before = _stages(ui, app)
         try:
-            df = Q.REGISTRY[name].fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
+            stages = profile(spark, lambda: run(name)).stages
         except Exception as exc:  # noqa: BLE001
             failures.append(f"{name}: FAILED to run: {exc}")
             continue
-        after = _settled_stages(ui, app)
-        new = [s for k, s in after.items() if k not in before]
-        sw_mb = sum(s.get("shuffleWriteBytes", 0) for s in new) / 1e6
+        if not stages:
+            failures.append(f"{name}: profile holds no completed stages")
+            continue
+        sw_mb = sum(s.shuffle_write_bytes for s in stages) / 1e6
         verdict = "ok" if sw_mb <= bound_mb else "OVER BOUND"
         print(
             f"{name}: shuffle_write={sw_mb:.2f} MB "

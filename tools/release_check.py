@@ -43,7 +43,8 @@ LEGS: list[tuple[str, list[str]]] = [
     # canaries that MUST hold even on --fast spot checks: the inventory
     # docs match the registry and every registered query actually builds
     # + canonicalizes against the real testdata (round-10's red row came
-    # from a snapshot shipped without running exactly these).
+    # from a snapshot shipped without running exactly these), and the
+    # stage-metrics reader the movement gate depends on still reads.
     (
         "registry-canary",
         [
@@ -51,6 +52,7 @@ LEGS: list[tuple[str, list[str]]] = [
             "tests/test_registry.py::test_inventory_md_matches_registry",
             "tests/test_registry.py::test_coverage_md_counts_match_registry",
             "tests/test_registry.py::test_every_query_output_is_canonicalizable",
+            "tests/test_profile.py",
         ],
     ),
 ]

@@ -19,19 +19,18 @@ ONE key holds 50% of the left rows — and runs it three ways:
                  a stateful/streaming side).
 
 For each variant it records wall time, the join-stage per-task
-shuffle-read max and median (REST taskSummary), and the plan marker,
-then rewrites the "## Skew evidence" section of SHUFFLE.md (preserved
-verbatim by tools/stage_metrics.py regenerations).
+shuffle-read max and median (``xetl_spark.profile`` task quantiles),
+and the plan marker, then rewrites the "## Skew evidence" section of
+SHUFFLE.md in place (tools/stage_metrics.write_section).
 
 Usage: python tools/skew_evidence.py
 """
 
 from __future__ import annotations
 
-import json
 import sys
-import time
-import urllib.request
+
+from stage_metrics import SHUFFLE_MD, write_section
 
 sys.path.insert(0, "/root/repo")
 
@@ -40,35 +39,14 @@ N_KEYS = 1_000
 SALT_BUCKETS = 16
 
 
-def _stages(ui: str, app: str) -> dict:
-    url = f"{ui}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url) as r:
-        return {(s["stageId"], s["attemptId"]): s for s in json.load(r)}
-
-
-def _task_summary(ui: str, app: str, stage_id: int, attempt: int) -> dict:
-    url = (
-        f"{ui}/api/v1/applications/{app}/stages/{stage_id}/{attempt}/"
-        f"taskSummary?quantiles=0.5,1.0"
-    )
-    with urllib.request.urlopen(url) as r:
-        return json.load(r)
-
-
 def main() -> None:
     from pyspark.sql import functions as F
 
     from xetl_spark.operators.relational import salted_join
+    from xetl_spark.profile import profile
     from xetl_spark.session import get_session
 
-    spark = get_session(
-        "skew_evidence",
-        shuffle_partitions=32,
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4048"},
-    )
-    ui = spark.sparkContext.uiWebUrl
-    with urllib.request.urlopen(f"{ui}/api/v1/applications") as r:
-        app = json.load(r)[0]["id"]
+    spark = get_session("skew_evidence", shuffle_partitions=32)
 
     def skewed_left():
         # 50% of rows share key 0; the rest spread over N_KEYS
@@ -95,7 +73,6 @@ def main() -> None:
         spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
         spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        before = _stages(ui, app)
         left = skewed_left()
         if salted:
             joined = salted_join(left, right, on=["k"], salt_buckets=SALT_BUCKETS)
@@ -106,21 +83,13 @@ def main() -> None:
         out = joined.groupBy().agg(
             F.count("*").alias("n"), F.sum("v").alias("sv")
         )
-        t0 = time.time()
-        rows = out.collect()
-        wall = time.time() - t0
-        assert rows[0]["n"] == N_LEFT, rows
+        p = profile(spark, out.collect)
+        assert p.result[0]["n"] == N_LEFT, p.result
         plan = out._jdf.queryExecution().executedPlan().toString()
-        time.sleep(0.4)
-        after = _stages(ui, app)
-        new = [(k, s) for k, s in after.items() if k not in before]
-        # the join stage = the new stage with the largest shuffle read
-        join_stage = max(new, key=lambda ks: ks[1].get("shuffleReadBytes", 0))
-        (sid, att), st = join_stage
-        summ = _task_summary(ui, app, sid, att)
-        srb = summ.get("shuffleReadMetrics", {}).get("readBytes", [0, 0])
-        med, mx = srb[0], srb[-1]
-        total = st.get("shuffleReadBytes", 0)
+        # the join stage = the stage with the largest shuffle read
+        st = max(p.stages, key=lambda s: s.shuffle_read_bytes)
+        med, mx = st.task_shuffle_read_bytes
+        total = st.shuffle_read_bytes
         marker = (
             "SortMergeJoin(skew=true)"
             if "skew=true" in plan
@@ -128,8 +97,8 @@ def main() -> None:
         )
         res = {
             "tag": tag,
-            "wall_s": round(wall, 2),
-            "join_stage_tasks": st.get("numCompleteTasks"),
+            "wall_s": round(p.wall_s, 2),
+            "join_stage_tasks": st.tasks,
             "shuffle_read_total_mb": round(total / 1e6, 1),
             "task_read_median_mb": round(med / 1e6, 2),
             "task_read_max_mb": round(mx / 1e6, 2),
@@ -169,15 +138,7 @@ def main() -> None:
             f"| {r['task_read_max_mb']} | {r['max_over_median']}x "
             f"| {r['marker']} |"
         )
-    section = "\n".join(lines) + "\n"
-
-    path = "/root/repo/SHUFFLE.md"
-    text = open(path).read()
-    i = text.find("## Skew evidence")
-    text = (text[:i].rstrip() + "\n\n" + section) if i >= 0 else (
-        text.rstrip() + "\n\n" + section
-    )
-    open(path, "w").write(text)
+    write_section(SHUFFLE_MD, "\n".join(lines))
     print("updated SHUFFLE.md skew section")
 
 

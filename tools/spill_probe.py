@@ -20,8 +20,10 @@ partitions stay big) against inputs replicated to exceed the pool:
 
 Each worker asserts its result cardinality, so a silent wrong answer
 under memory pressure would fail the probe, and prints one JSON line
-with the REST-summed spill counters. Exit code != 0 (e.g. OOM) marks
-the row FAILED.
+with the spill counters summed over the completed stages of the
+workload's jobs (``xetl_spark.profile``). Exit code != 0 (e.g. OOM)
+marks the row FAILED. The result replaces the "## Constrained-memory
+spill" section of SHUFFLE.md in place (tools/stage_metrics.write_section).
 
 Usage: python tools/spill_probe.py            # both shapes + SHUFFLE.md
        python tools/spill_probe.py worker <shape>   # internal
@@ -32,28 +34,16 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
-import time
-import urllib.request
+
+from stage_metrics import SHUFFLE_MD, write_section
 
 SHAPES = ("sort8x", "kn_fullfit")
 
 
-def worker(shape: str) -> None:
-    from pyspark.sql import SparkSession
+def run(spark, shape: str) -> None:
+    """The measured workload: build, run and verify one shape."""
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.driver.memory", "1g")
-        .config("spark.memory.fraction", "0.2")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4049")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    t0 = time.time()
     if shape == "sort8x":
         li = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
         n0 = li.count()
@@ -87,27 +77,36 @@ def worker(shape: str) -> None:
         assert n > 0.9 * 32 * n0, (n, n0)  # short docs are unscored
     else:
         raise SystemExit(f"unknown shape {shape}")
-    wall = time.time() - t0
-    ui = spark.sparkContext.uiWebUrl
-    with urllib.request.urlopen(f"{ui}/api/v1/applications") as r:
-        app = json.load(r)[0]["id"]
-    with urllib.request.urlopen(
-        f"{ui}/api/v1/applications/{app}/stages?status=complete"
-    ) as r:
-        st = json.load(r)
+
+
+def worker(shape: str) -> None:
+    from pyspark.sql import SparkSession
+
+    from xetl_spark.profile import profile
+
+    spark = (
+        SparkSession.builder.master("local[8]")
+        .config("spark.driver.memory", "1g")
+        .config("spark.memory.fraction", "0.2")
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.sql.adaptive.enabled", "false")
+        .config("spark.sql.session.timeZone", "UTC")
+        .getOrCreate()
+    )
+    p = profile(spark, lambda: run(spark, shape))
     print(
         json.dumps(
             {
                 "shape": shape,
-                "wall_s": round(wall, 1),
+                "wall_s": round(p.wall_s, 1),
                 "shuffle_write_mb": round(
-                    sum(s.get("shuffleWriteBytes", 0) for s in st) / 1e6, 1
+                    sum(s.shuffle_write_bytes for s in p.stages) / 1e6, 1
                 ),
                 "mem_spill_mb": round(
-                    sum(s.get("memoryBytesSpilled", 0) for s in st) / 1e6, 1
+                    sum(s.mem_spill_bytes for s in p.stages) / 1e6, 1
                 ),
                 "disk_spill_mb": round(
-                    sum(s.get("diskBytesSpilled", 0) for s in st) / 1e6, 1
+                    sum(s.disk_spill_bytes for s in p.stages) / 1e6, 1
                 ),
             }
         )
@@ -161,18 +160,7 @@ def main() -> None:
                 f"| {r['shape']} | {r['wall_s']} | {r['shuffle_write_mb']} "
                 f"| {r['mem_spill_mb']} | {r['disk_spill_mb']} | {ok} |"
             )
-    section = "\n".join(lines) + "\n"
-    path = "/root/repo/SHUFFLE.md"
-    text = open(path).read()
-    i = text.find("## Constrained-memory spill")
-    if i >= 0:
-        j = text.find("\n## ", i + 1)
-        text = text[:i].rstrip() + "\n\n" + section + (
-            text[j:].lstrip("\n") if j >= 0 else ""
-        )
-    else:
-        text = text.rstrip() + "\n\n" + section
-    open(path, "w").write(text)
+    write_section(SHUFFLE_MD, "\n".join(lines))
     print("updated SHUFFLE.md constrained-memory section")
 
 

@@ -2,28 +2,35 @@
 set and write SHUFFLE.md — the measured-evidence companion to
 SCALE.md's design arguments.
 
-Method: run each headline query to completion, then diff the
-completed-stage set from Spark's monitoring REST API
-(/api/v1/applications/<app>/stages, the same data the UI shows) and
-sum shuffle read/write and memory/disk spill over the new stages.
-Source bytes are the on-disk sizes of the plan's input files
-(df.inputFiles) — the REST inputBytes counter undercounts local
+Method: build and run each headline query through the noop sink under
+``xetl_spark.profile.profile`` and sum shuffle read/write and
+memory/disk spill over the completed stages of its jobs (read
+in-process from Spark's status store, the data the monitoring REST API
+serves). Source bytes are the on-disk sizes of the plan's input files
+(df.inputFiles) — the status store's input counter undercounts local
 scans. Wall time is NOT reported
 here (bench.py owns timing); this file answers "how much data moved"
 — the number that decides whether a plan survives a 1000-executor
 100 TB run, because shuffle volume scales with data while wall time
 on local[32] does not.
 
+SHUFFLE.md is shared with tools/skew_evidence.py and
+tools/spill_probe.py; all three rewrite their own section through
+``write_section`` and leave the others byte-identical.
+
 Usage: python tools/stage_metrics.py [sf_dir]
 """
 
 from __future__ import annotations
 
-import json
+import os
+import re
 import sys
-import urllib.request
+from pathlib import Path
 
 sys.path.insert(0, "/root/repo")
+
+SHUFFLE_MD = Path(__file__).resolve().parents[1] / "SHUFFLE.md"
 
 HEADLINE = [
     "q_agg_pricing_summary",
@@ -59,60 +66,65 @@ HEADLINE = [
 ]
 
 
-def _stages(ui: str, app: str) -> dict[int, dict]:
-    with urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/stages?status=complete") as r:
-        return {(s["stageId"], s["attemptId"]): s for s in json.load(r)}
+def write_section(path: Path, section: str) -> None:
+    """Put ``section`` into the markdown file at ``path`` under one rule:
+    a section runs from its heading line (``section``'s first line) to
+    the next ``\\n## `` or EOF. A section with that heading is replaced
+    in place, otherwise ``section`` is appended; the rest of the file
+    stays byte-identical."""
+    text = path.read_text() if path.exists() else ""
+    section = section.strip("\n") + "\n"
+    heading = section.split("\n", 1)[0]
+    m = re.search(rf"^{re.escape(heading)}$", text, flags=re.M)
+    if m is None:
+        text = (text.rstrip("\n") + "\n\n" if text.strip() else "") + section
+    else:
+        end = text.find("\n## ", m.end())
+        rest = "" if end < 0 else "\n" + text[end + 1 :]
+        text = text[: m.start()] + section + rest
+    path.write_text(text)
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     import xetl_spark.queries as Q
+    from xetl_spark.profile import profile
     from xetl_spark.session import get_session
 
-    spark = get_session(
-        "stage_metrics",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4047"},
-    )
-    ui = spark.sparkContext.uiWebUrl
-    if not ui:
-        raise SystemExit("Spark UI disabled; stage metrics need the REST API")
-    with urllib.request.urlopen(f"{ui}/api/v1/applications") as r:
-        app = json.load(r)[0]["id"]
+    spark = get_session("stage_metrics")
 
-    import os as _os
-    import time as _time
+    def run(name: str, d: str):
+        df = Q.REGISTRY[name].fn(spark, d)
+        # noop-sink write, not count(): count lets Catalyst prune
+        # the work being measured (round-9 methodology fix)
+        df.write.format("noop").mode("overwrite").save()
+        return df
 
     def measure(d: str) -> list[tuple[str, dict]]:
         out = []
         for name in HEADLINE:
-            before = _stages(ui, app)
             try:
-                df = Q.REGISTRY[name].fn(spark, d)
-                # noop-sink write, not count(): count lets Catalyst prune
-                # the work being measured (round-9 methodology fix)
-                df.write.format("noop").mode("overwrite").save()
+                p = profile(spark, lambda: run(name, d))
             except Exception as e:  # noqa: BLE001
                 print(f"# {name} FAILED: {e}", file=sys.stderr)
                 continue
-            _time.sleep(0.3)  # let the status store settle
-            after = _stages(ui, app)
-            new = [s for k, s in after.items() if k not in before]
-            # source bytes = the actual files behind the plan (REST
-            # inputBytes undercounts local scans); shuffle/spill come from
+            # source bytes = the actual files behind the plan (the input
+            # counter undercounts local scans); shuffle/spill come from
             # the shuffle managers and are exact
             try:
                 src = sum(
-                    _os.path.getsize(f.removeprefix("file://"))
-                    for f in df.inputFiles()
+                    os.path.getsize(f.removeprefix("file://"))
+                    for f in p.result.inputFiles()
                 )
             except Exception:  # noqa: BLE001  (non-file sources)
                 src = 0
+            new = p.stages
             agg = {
                 "source_mb": src / 1e6,
-                "shuffle_write_mb": sum(s.get("shuffleWriteBytes", 0) for s in new) / 1e6,
-                "shuffle_read_mb": sum(s.get("shuffleReadBytes", 0) for s in new) / 1e6,
-                "mem_spill_mb": sum(s.get("memoryBytesSpilled", 0) for s in new) / 1e6,
-                "disk_spill_mb": sum(s.get("diskBytesSpilled", 0) for s in new) / 1e6,
+                "shuffle_write_mb": sum(s.shuffle_write_bytes for s in new) / 1e6,
+                "shuffle_read_mb": sum(s.shuffle_read_bytes for s in new) / 1e6,
+                "mem_spill_mb": sum(s.mem_spill_bytes for s in new) / 1e6,
+                "disk_spill_mb": sum(s.disk_spill_bytes for s in new) / 1e6,
                 "stages": len(new),
             }
             out.append((name, agg))
@@ -124,14 +136,14 @@ def main() -> None:
     # data growth is the scale question local wall time can't answer
     sf1_dir = "/root/repo/.sfdata/sf1"
     sf1_rows: dict[str, dict] = {}
-    if sf_dir != sf1_dir and _os.path.isdir(sf1_dir):
+    if sf_dir != sf1_dir and os.path.isdir(sf1_dir):
         sf1_rows = dict(measure(sf1_dir))
 
     lines = [
         "# SHUFFLE — measured data movement per headline query",
         "",
         f"Generated by `python tools/stage_metrics.py {sf_dir}` from Spark's",
-        "monitoring REST API (completed-stage deltas per query). Shuffle",
+        "status store (the completed stages of each query's jobs). Shuffle",
         "volume — not local wall time — is what scales to a 1000-executor",
         "100 TB run: a query whose shuffle is a small fraction of its input",
         "stays network-bound-safe at scale; spill >0 at this SF flags an",
@@ -159,10 +171,12 @@ def main() -> None:
         "Zero spill anywhere = partitions sized within executor memory at "
         "this SF.",
     ]
+    # every other section (skew evidence, constrained-memory spill, and
+    # sf1 growth when this run has no sf1 fixture) stays as it is
+    write_section(SHUFFLE_MD, "\n".join(lines))
     if sf1_rows:
-        lines += [
-            "",
-            "## sf1 shuffle growth (r13)",
+        lines = [
+            "## sf1 shuffle growth",
             "",
             "The scale question local wall time can't answer: does shuffle",
             "VOLUME track data volume? Same battery at the 10x gen_sf",
@@ -212,24 +226,7 @@ def main() -> None:
             "  vocabulary types (the groupBy key space grows a little",
             "  faster than rows), and zero spill everywhere.",
         ]
-    # preserve sections other tools/runs maintain (the SCALING.md
-    # lesson — a regen must not silently drop evidence blocks): the
-    # sf1 growth section when this run has no sf1 fixture to re-measure
-    # it, and the measured-skew section from skew_evidence.py
-    try:
-        old = open("/root/repo/SHUFFLE.md").read()
-        if not sf1_rows:
-            i = old.find("## sf1 shuffle growth")
-            if i >= 0:
-                j = old.find("## Skew evidence", i)
-                lines += ["", old[i : j if j >= 0 else None].rstrip()]
-        i = old.find("## Skew evidence")
-        if i >= 0:
-            lines += ["", old[i:].rstrip()]
-    except FileNotFoundError:
-        pass
-    with open("/root/repo/SHUFFLE.md", "w") as f:
-        f.write("\n".join(lines) + "\n")
+        write_section(SHUFFLE_MD, "\n".join(lines))
     print("wrote SHUFFLE.md")
 
 

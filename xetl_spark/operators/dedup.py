@@ -260,9 +260,13 @@ def lsh_candidate_pairs(
     # instead of re-shuffling the deduped pair table a second time
     # (guide §2.4: operations keyed the same way share one exchange —
     # the pair table now crosses 2 exchanges end to end, not 3). Cost:
-    # duplicates from other partitions are no longer collapsed by a
-    # map-side partial before this shuffle, bounded by the band count
-    # (a pair occurs at most ``bands`` times).
+    # no map-side partial collapses duplicates before this shuffle, so
+    # (1) a pair crosses it up to ``bands`` times, once per band it
+    # collides in, and (2) all raw pairs of one doc_a land on one task.
+    # doc_a is the smaller id of a pair, so the smallest doc of a
+    # near-duplicate cluster of size c anchors up to (c - 1) × bands
+    # rows on its single key (c ≤ max_bucket_size); AQE splits skewed
+    # joins, not aggregates, so that task is not split at runtime.
     return raw_pairs.repartition("doc_a").distinct()
 
 
