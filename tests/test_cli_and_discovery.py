@@ -5,10 +5,12 @@ task-level golden tests."""
 import subprocess
 import sys
 import textwrap
+from pathlib import Path
 
 import pytest
 
 SF = "/root/testdata/sf0.001"
+REPO = Path(__file__).resolve().parents[1]
 
 
 def test_cli_runs_manifest(tmp_path):
@@ -39,6 +41,31 @@ def test_cli_runs_manifest(tmp_path):
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "src: success" in proc.stdout and "sink: success" in proc.stdout
     assert out.exists()
+
+
+def test_cli_dryrun_honours_commands(tmp_path):
+    """--dryrun -c explains only the selected commands."""
+    manifest = tmp_path / "job.yml"
+    manifest.write_text(
+        textwrap.dedent(
+            f"""
+            name: dry-filter
+            commands:
+              - {{name: src, task: read_parquet, env: {{PATH: {SF}/region.parquet}}}}
+              - {{name: top, task: sql, env: {{QUERY: "SELECT 1 AS x"}}}}
+            """
+        )
+    )
+    proc = subprocess.run(
+        [sys.executable, "-m", "xetl_spark", str(manifest), "--dryrun", "-c", "top"],
+        capture_output=True,
+        text=True,
+        cwd=str(REPO),
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    commands = [ln for ln in proc.stdout.splitlines() if ln.startswith("command: ")]
+    assert commands == ["command: top (task=sql, skip=False)"], proc.stdout
 
 
 def test_cli_missing_manifest_exit_1():

@@ -4,7 +4,13 @@ e2e strategy (tests/test_end_to_end.py) with DataFrame assertions
 instead of stdout transcripts.
 """
 
+import contextlib
+import logging
+import re
 import textwrap
+import threading
+import time
+from pathlib import Path
 
 import pytest
 
@@ -203,8 +209,8 @@ def test_dryrun_executes_nothing(spark, tmp_path):
           - {{name: sink, task: write_parquet, env: {{INPUT: src, PATH: {out}}}}}
         """
     )
-    results = run_job(spark, job, dryrun=True)
-    assert all(r.status == "dryrun" for r in results)
+    text = explain_job(spark, job)
+    assert "command: sink" in text
     assert not out.exists()
 
 
@@ -448,7 +454,7 @@ def test_stage_dependencies_default_is_sequential(spark):
           - {{name: c, task: sql, env: {{QUERY: "SELECT * FROM a"}}}}
         """
     )
-    plan = _prepare(job, None, False, None)
+    plan = _prepare(job, None, None)
     assert stage_dependencies(job, plan) == {0: set(), 1: {0}, 2: {1}}
 
 
@@ -470,7 +476,7 @@ def test_stage_dependencies_sources(spark):
           - {{name: d, task: limit, env: {{INPUT: b, N: 5, DEPENDS_ON: ""}}}}
         """
     )
-    plan = _prepare(job, None, False, None)
+    plan = _prepare(job, None, None)
     deps = stage_dependencies(job, plan)
     assert deps[0] == set()
     assert deps[1] == set()  # explicit root
@@ -480,7 +486,7 @@ def test_stage_dependencies_sources(spark):
 
 def test_parallel_run_matches_sequential(spark, tmp_path):
     """A diamond DAG (two independent reads feeding a join) produces the
-    same result under the parallel scheduler as sequentially."""
+    same result with four workers as with one."""
     out = tmp_path / "p_out"
     manifest = f"""
         name: diamond
@@ -503,15 +509,15 @@ def test_parallel_run_matches_sequential(spark, tmp_path):
         """
     seq = run_job(spark, _job(manifest))
     n_seq = sorted((r.c_mktsegment, r.n) for r in seq[2].output.collect())
-    par = run_job(spark, _job(manifest), parallel=True, max_workers=4)
+    par = run_job(spark, _job(manifest), max_workers=4)
     assert [r.status for r in par] == ["success"] * 4
     n_par = sorted((r.c_mktsegment, r.n) for r in par[2].output.collect())
     assert n_par == n_seq
 
 
 def test_parallel_skip_chain_matches_sequential(spark, tmp_path):
-    """`previous` resolves THROUGH a skip:true stage identically in
-    both schedulers: the implicit chain read → (skipped filter) → agg
+    """`previous` resolves THROUGH a skip:true stage identically for
+    one and four workers: the implicit chain read → (skipped filter) → agg
     must aggregate the read's output, not a None previous."""
     manifest = f"""
         name: skipchain
@@ -526,7 +532,7 @@ def test_parallel_skip_chain_matches_sequential(spark, tmp_path):
               env: {{QUERY: "SELECT count(*) AS n FROM src"}}}}
         """
     seq = run_job(spark, _job(manifest))
-    par = run_job(spark, _job(manifest), parallel=True, max_workers=4)
+    par = run_job(spark, _job(manifest), max_workers=4)
     assert [r.status for r in seq] == ["success", "skipped", "success"]
     assert [r.status for r in par] == ["success", "skipped", "success"]
     assert par[2].output.collect() == seq[2].output.collect()
@@ -534,7 +540,7 @@ def test_parallel_skip_chain_matches_sequential(spark, tmp_path):
 
 def test_parallel_previous_through_skip(spark, tmp_path):
     """A stage consuming ctx.previous (no named view) after a skipped
-    predecessor sees the last non-skipped output in both modes."""
+    predecessor sees the last non-skipped output for any worker count."""
     from xetl_spark.plans.registry import task
 
     reg = BUILTINS.copy()
@@ -555,7 +561,7 @@ def test_parallel_previous_through_skip(spark, tmp_path):
           - {{name: head, task: take3}}
         """
     seq = run_job(spark, _job(manifest), registry=reg)
-    par = run_job(spark, _job(manifest), parallel=True, max_workers=4, registry=reg)
+    par = run_job(spark, _job(manifest), max_workers=4, registry=reg)
     assert seq[2].output.count() == 3
     assert par[2].output.count() == 3
 
@@ -578,7 +584,157 @@ def test_parallel_failure_fails_fast(spark):
         """
     )
     with pytest.raises(TaskFailure):
-        run_job(spark, job, parallel=True, registry=reg)
+        run_job(spark, job, max_workers=4, registry=reg)
+
+
+def test_one_worker_failure_runs_nothing_after(spark):
+    """With one worker a failing stage aborts the job before any later
+    stage starts, even one that does not depend on it."""
+    reg = BUILTINS.copy()
+    calls = []
+
+    @task(registry=reg, name="boom")
+    def boom(ctx):
+        raise RuntimeError("kapow")
+
+    @task(registry=reg, name="count_calls")
+    def count_calls(ctx):
+        calls.append(ctx.command.name)
+
+    job = _job(
+        """
+        name: ffail
+        commands:
+          - {name: x, task: boom, env: {DEPENDS_ON: ""}}
+          - {name: y, task: count_calls, env: {DEPENDS_ON: ""}}
+        """
+    )
+    with pytest.raises(TaskFailure):
+        run_job(spark, job, max_workers=1, registry=reg)
+    assert calls == []
+
+
+def test_depends_on_previous_same_for_any_worker_count(spark, tmp_path):
+    """`previous` under an explicit DEPENDS_ON is the latest dependency's
+    output whatever the worker count: c reads a's 5 region rows, not
+    the 25 nation rows of the stage just before it."""
+    manifest = f"""
+        name: prevdeps
+        data: {tmp_path}
+        env: {{SF_DIR: {SF}}}
+        commands:
+          - {{name: a, task: read_parquet,
+              env: {{PATH: "${{SF_DIR}}/region.parquet"}}}}
+          - {{name: b, task: read_parquet,
+              env: {{PATH: "${{SF_DIR}}/nation.parquet", DEPENDS_ON: ""}}}}
+          - {{name: c, task: limit, env: {{N: 100, DEPENDS_ON: a}}}}
+        """
+    for workers in (1, 4):
+        results = run_job(spark, _job(manifest), max_workers=workers)
+        assert results[2].output.count() == 5, workers
+
+
+@pytest.mark.parametrize("workers", [1, 4])
+def test_stages_inherit_caller_job_tags(spark, tmp_path, workers):
+    """Stage jobs carry the caller's Spark local properties: a job tag
+    set around run_job (here by profile()) attributes them, also when
+    they run on scheduler threads."""
+    from xetl_spark.profile import profile
+
+    job = _job(
+        f"""
+        name: tagged
+        data: {tmp_path}
+        commands:
+          - {{name: src, task: read_parquet, env: {{PATH: {SF}/region.parquet}}}}
+          - {{name: sink, task: write_parquet,
+              env: {{INPUT: src, PATH: {tmp_path}/tagged_out}}}}
+        """
+    )
+    p = profile(spark, lambda: run_job(spark, job, max_workers=workers))
+    assert [r.status for r in p.result] == ["success"] * 2
+    assert len(p.stages) >= 1
+
+
+@contextlib.contextmanager
+def _runner_log(lines: list[str]):
+    """Capture the runner's records, formatted in the "moderate" style
+    on the thread that logs them."""
+    from xetl_spark.plans.logctx import NestedLogFormatter
+
+    class Capture(logging.Handler):
+        def emit(self, record):
+            lines.append(self.format(record))
+
+    handler = Capture()
+    handler.setFormatter(NestedLogFormatter("moderate"))
+    logger = logging.getLogger("xetl_spark.runner")
+    level = logger.level
+    logger.setLevel(logging.INFO)
+    logger.addHandler(handler)
+    try:
+        yield
+    finally:
+        logger.removeHandler(handler)
+        logger.setLevel(level)
+
+
+def test_concurrent_stages_keep_their_log_scopes(spark, tmp_path, monkeypatch):
+    """Stages running at once each log inside their own STAGE/TASK
+    scopes: every stage has its header and Return-code footer, every
+    "Running command" body line carries the TASK timestamp, and the
+    job banner and Done line stay at JOB level."""
+    monkeypatch.setenv("OUT_DIR", str(tmp_path / "par_out"))
+    example = Path(__file__).resolve().parents[1] / "examples" / "parallel_report.yml"
+    lines: list[str] = []
+    with _runner_log(lines):
+        results = run_job(spark, Job.from_file(str(example)), max_workers=4)
+    assert [r.status for r in results] == ["success"] * 5
+
+    names = [r.command.name for r in results]
+    running = [ln for ln in lines if "Running command" in ln]
+    assert len(running) == 5
+    for ln in running:
+        assert re.match(r"\d{4}-\d\d-\d\d \d\d:\d\d:\d\d\.\d{3}  Running command ", ln), ln
+    for i, name in enumerate(names, 1):
+        assert f"━╸Executing command: {name} ({i} of 5)╺━" in lines
+    assert lines.count("═╴Return code: 0╶═") == 5
+    banner = lines.index("─╴Executing job: parallel-report╶─")
+    assert all("Executing command" not in ln for ln in lines[:banner])
+    assert lines[-1] == "Done! \\o/"
+
+
+def test_job_level_line_while_a_stage_runs(spark):
+    """The scheduling thread logs at JOB level while a stage is inside
+    its TASK scope: stage a finishes, skipped stage s (after a) is
+    logged, and only then does concurrent stage b leave its task."""
+    reg = BUILTINS.copy()
+    both_in_task = threading.Barrier(2, timeout=60)
+    lines: list[str] = []
+
+    @task(registry=reg, name="hold")
+    def hold(ctx):
+        both_in_task.wait()
+        if ctx.command.name == "b":
+            deadline = time.time() + 60
+            while "Skipping command s (skip=true)" not in lines and time.time() < deadline:
+                time.sleep(0.01)
+        return ctx.spark.range(1)
+
+    job = _job(
+        """
+        name: holdjob
+        commands:
+          - {name: a, task: hold, env: {DEPENDS_ON: ""}}
+          - {name: b, task: hold, env: {DEPENDS_ON: ""}}
+          - {name: s, task: hold, skip: true, env: {DEPENDS_ON: a}}
+        """
+    )
+    with _runner_log(lines):
+        results = run_job(spark, job, max_workers=2, registry=reg)
+    assert [r.status for r in results] == ["success", "success", "skipped"]
+    assert "Skipping command s (skip=true)" in lines, lines
+    assert lines.count("═╴Return code: 0╶═") == 2
 
 
 def test_parallel_bad_depends_on_rejected(spark):
@@ -591,7 +747,7 @@ def test_parallel_bad_depends_on_rejected(spark):
           - {name: a, task: sql, env: {QUERY: "SELECT 1 AS x", DEPENDS_ON: "zzz"}}
         """
     )
-    plan = _prepare(job, None, False, None)
+    plan = _prepare(job, None, None)
     with pytest.raises(ValidationError):
         stage_dependencies(job, plan)
 
@@ -650,7 +806,7 @@ def test_example_parallel_report_manifest(spark, tmp_path, monkeypatch):
     scheduler and produces the expected star-join revenue rows."""
     monkeypatch.setenv("OUT_DIR", str(tmp_path / "par_out"))
     job = Job.from_file("/root/repo/examples/parallel_report.yml")
-    results = run_job(spark, job, parallel=True, max_workers=4)
+    results = run_job(spark, job, max_workers=4)
     assert [r.status for r in results] == ["success"] * 5
     out = spark.read.parquet(str(tmp_path / "par_out"))
     assert out.count() == 25  # one row per nation
@@ -775,9 +931,9 @@ def test_compact_and_resample_tasks(spark, tmp_path):
 @pytest.mark.parametrize("seed", [3, 17, 42, 101])
 def test_parallel_scheduler_parity_random_dags(spark, seed):
     """Property: for ANY dag shape — random DEPENDS_ON edges, random
-    skip flags, implicit chains mixed with explicit deps — the parallel
-    scheduler produces the same per-stage statuses and the same final
-    outputs as sequential execution. (Regression net for the skip-chain
+    skip flags, implicit chains mixed with explicit deps — four workers
+    produce the same per-stage statuses and the same final outputs as
+    one worker (job order). (Regression net for the skip-chain
     class of bugs: previous resolution through output-less stages.)"""
     import random
 
@@ -830,10 +986,8 @@ def test_parallel_scheduler_parity_random_dags(spark, seed):
             out.append((r.command.name, r.status, rows))
         return out
 
-    seq = statuses_and_rows(run_job(spark, _job(manifest)))
-    par = statuses_and_rows(
-        run_job(spark, _job(manifest), parallel=True, max_workers=4)
-    )
+    seq = statuses_and_rows(run_job(spark, _job(manifest), max_workers=1))
+    par = statuses_and_rows(run_job(spark, _job(manifest), max_workers=4))
     assert seq == par
 
 

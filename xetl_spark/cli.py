@@ -71,9 +71,8 @@ def argument_parser() -> argparse.ArgumentParser:
         const=8,
         type=_positive_int,
         metavar="N",
-        help="schedule independent stages concurrently on up to N threads "
-        "(default 8); stages opt in with DEPENDS_ON, default order is "
-        "sequential",
+        help="run up to N stages at once (bare flag: 8; default: 1, job "
+        "order); stages opt in with DEPENDS_ON",
     )
     p.add_argument(
         "--report",
@@ -123,7 +122,7 @@ def main(argv: list[str] | None = None) -> int:
         ManifestError,
         ValidationError,
     )
-    from xetl_spark.plans.runner import TaskFailure, explain_job, run_job
+    from xetl_spark.plans.runner import TaskFailure, _filter_commands, explain_job, run_job
     from xetl_spark.session import get_session
 
     try:
@@ -161,7 +160,8 @@ def main(argv: list[str] | None = None) -> int:
         return 1 if failed else 0
 
     if args.dryrun:
-        print(explain_job(spark, job))
+        selected = job.model_copy(update={"commands": _filter_commands(job, args.commands)})
+        print(explain_job(spark, selected))
         return 0
     try:
         results = run_job(
@@ -169,8 +169,7 @@ def main(argv: list[str] | None = None) -> int:
             job,
             commands=args.commands,
             resume=args.resume,
-            parallel=args.parallel is not None,
-            max_workers=args.parallel if args.parallel is not None else 8,
+            max_workers=args.parallel or 1,
         )
     except TaskFailure as tf:
         print(f"error: {tf}", file=sys.stderr)

@@ -8,10 +8,10 @@ reference pins its transcripts (tests/test_end_to_end.py:202-249).
 
 Different architecture from the reference (which mutates formatter
 state around every log call from inside a contextmanager): here the
-active scopes live on a module-level stack that the formatter READS at
+active scopes live in a context variable that the formatter READS at
 format time, and header/footer lines are marked by a record attribute
 (``extra={"xetl_line": ...}``) — no handler mutation, no state to
-unwind on exceptions beyond the stack itself.
+unwind on exceptions beyond resetting the variable.
 """
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ from __future__ import annotations
 import logging
 import sys
 from contextlib import contextmanager
+from contextvars import ContextVar
 from dataclasses import dataclass
 from datetime import datetime
 from enum import Enum
@@ -65,10 +66,11 @@ _ANSI = {
     "gray": "\033[90m",
 }
 
-#: active scope stack (the CLI runner is effectively single-threaded
-#: per process; the parallel scheduler logs stage lifecycle from the
-#: main thread only)
-_stack: list[Scope] = []
+#: active scopes, innermost last. A context variable, so concurrent
+#: stages (each run in a copy of the scheduling thread's context) nest
+#: their STAGE/TASK scopes under the shared JOB scope without seeing
+#: each other's.
+_scopes: ContextVar[tuple[Scope, ...]] = ContextVar("xetl_log_scopes", default=())
 
 
 class NestedLogFormatter(logging.Formatter):
@@ -98,7 +100,8 @@ class NestedLogFormatter(logging.Formatter):
         elif record.levelname == "WARNING":
             msg = self._c(f"WARNING {msg}", "yellow")
 
-        scope = _stack[-1] if _stack else None
+        scopes = _scopes.get()
+        scope = scopes[-1] if scopes else None
         if scope is None:
             return msg
         decor = _STYLES[self.style][scope]
@@ -130,7 +133,7 @@ def log_scope(scope: Scope, header: str, footer: str | None = None):
     emit ``footer`` (if set — callers may also set it via the yielded
     setter, e.g. an exit code known only at the end) on the way out."""
     log = logging.getLogger("xetl_spark.runner")
-    _stack.append(scope)
+    token = _scopes.set(_scopes.get() + (scope,))
     log.info(header, extra={"xetl_line": "header"})
 
     state = {"footer": footer}
@@ -143,7 +146,7 @@ def log_scope(scope: Scope, header: str, footer: str | None = None):
     finally:
         if state["footer"]:
             log.info(state["footer"], extra={"xetl_line": "footer"})
-        _stack.pop()
+        _scopes.reset(token)
 
 
 def configure(style: str = "moderate", timestamps: bool = True) -> None:

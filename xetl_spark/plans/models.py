@@ -286,7 +286,7 @@ class Job(BaseModel):
 
     # placeholder-reference edges recorded at resolution time
     # (command index -> earlier command indices it referenced);
-    # the parallel scheduler reads these as data dependencies.
+    # the job scheduler reads these as data dependencies.
     _dep_edges: dict[int, set[int]] = PrivateAttr(default_factory=dict)
 
     def set_dep_edges(self, edges: dict[int, set[int]]) -> None:

@@ -72,8 +72,8 @@ class Resolver:
         self.names = [c.name for c in job.commands]
         # placeholder-reference edges discovered during resolution:
         # command index -> indices of earlier commands it references
-        # (${previous.*} and ${name.*}). Consumed by the parallel
-        # scheduler (runner.run_job(parallel=True)) as data-dependency
+        # (${previous.*} and ${name.*}). Consumed by the job
+        # scheduler (runner.stage_dependencies) as data-dependency
         # edges — recorded here because after eager resolution the
         # substituted scalars no longer reveal their provenance.
         self.deps: dict[int, set[int]] = {}
@@ -230,7 +230,7 @@ def resolve_placeholders(job: "Job") -> None:
     this every command env value is a concrete scalar (reference
     IR #3, job.py:132-137). Placeholder-reference edges discovered
     along the way are kept on the job (``job.dep_edges``) for the
-    parallel scheduler."""
+    job scheduler."""
     r = Resolver(job)
     r.resolve()
     job.set_dep_edges(r.deps)

@@ -1,16 +1,18 @@
-"""Sequential job executor.
+"""Job executor: one DAG scheduler for every worker count.
 
 Reference parity (xetl/models/job.py:146-214, command.py:70-86,
 task.py:291-347): command filtering, data-dir guard, fail-fast
-pre-validation of EVERY command before any execution, sequential loop,
-skip-but-still-resolvable stages, dry-run, TaskFailure abort.
+pre-validation of EVERY command before any execution, job-order
+execution (the scheduler's one-worker default), skip-but-still-
+resolvable stages, TaskFailure abort.
 
 Spark-first differences (SURVEY.md §4.2): stage results are lazy
 DataFrames registered as temp views — Catalyst fuses across stages (an
 improvement over the reference's per-command file materialization);
 a stage opts into materialization with MATERIALIZE=true, writing
-parquet under the job's data dir. Dry-run prints the fully-resolved
-manifest plus each stage's ``explain`` instead of argv/env dumps.
+parquet under the job's data dir. Dry-run (``explain_job``) prints the
+fully-resolved manifest plus each stage's ``explain`` instead of
+argv/env dumps.
 """
 
 from __future__ import annotations
@@ -39,6 +41,12 @@ log = logging.getLogger("xetl_spark.runner")
 # commands carry only task inputs; these are the Spark-runner extensions
 # for materialization, DAG scheduling, and retry policy).
 RESERVED_ENV = frozenset({"MATERIALIZE", "DEPENDS_ON", "RETRIES", "RETRY_BACKOFF_S"})
+
+# Built-in tasks whose effect is writing their input out: a dry-run
+# explains that input instead of calling them, so it writes nothing.
+SINK_TASKS = frozenset(
+    {"write_parquet", "write_csv", "write_json", "write_avro", "save_table"}
+)
 
 
 class TaskFailure(RuntimeError):
@@ -101,7 +109,7 @@ class StageContext:
 @dataclass
 class StageResult:
     command: Command
-    status: str  # "success" | "skipped" | "filtered" | "dryrun" | "resumed"
+    status: str  # "success" | "skipped" | "resumed"
     output: DataFrame | None = None
     wall_s: float = 0.0
     attempts: int = 1
@@ -202,8 +210,8 @@ def _execute_stage(
     # MATERIALIZE stage is re-runnable by construction (lazy stages
     # defer execution to a downstream action anyway); a lazy stage that
     # fails while BUILDING its plan is also retried — transient driver
-    # conditions (e.g. a view not yet registered by a racing stage in
-    # parallel mode, a flaky source listing) are the target.
+    # conditions (e.g. a view not yet registered by a concurrent stage,
+    # a flaky source listing) are the target.
     max_attempts = 1 + max(0, int(env.get("RETRIES", 0) or 0))
     backoff = float(env.get("RETRY_BACKOFF_S", 0) or 0)
     rows = nbytes = None
@@ -235,7 +243,7 @@ def _execute_stage(
             if attempt >= max_attempts:
                 raise TaskFailure(cmd, exc) from exc
             # full jitter on the exponential backoff: stages retried in
-            # lockstep (parallel mode, shared failing dependency) would
+            # lockstep (concurrent stages, shared failing dependency) would
             # otherwise re-hit the resource simultaneously every round
             import random
 
@@ -264,7 +272,6 @@ def _execute_stage(
 def _prepare(
     job: Job,
     commands: str | list[str] | None,
-    dryrun: bool,
     registry: TaskRegistry | None,
 ) -> list[tuple[Command, Any, Any, dict[str, EnvValue]]]:
     """Shared preamble: discover tasks, filter commands, data-dir
@@ -276,7 +283,7 @@ def _prepare(
 
     selected = _filter_commands(job, commands)
 
-    if job.data and not dryrun:
+    if job.data:
         import os
 
         if not os.path.isdir(job.data):
@@ -352,168 +359,131 @@ def run_job(
     spark: SparkSession,
     job: Job,
     commands: str | list[str] | None = None,
-    dryrun: bool = False,
     registry: TaskRegistry | None = None,
     resume: bool = False,
-    parallel: bool = False,
-    max_workers: int = 8,
+    max_workers: int = 1,
 ) -> list[StageResult]:
     """Execute the job with fail-fast validation.
 
     Execution order mirrors the reference (job.py:175-207): discover
-    tasks → data-dir guard (skipped on dry-run) → validate every
-    selected command against its task's env interface BEFORE running
-    anything → execution; skip:true stages are not executed but their
-    (already-resolved) env stays referenceable.
+    tasks → data-dir guard → validate every selected command against
+    its task's env interface BEFORE running anything → execution;
+    skip:true stages are not executed but their (already-resolved) env
+    stays referenceable.
 
     ``resume=True``: a MATERIALIZE=true stage whose checkpoint already
     exists under ``<data>/_stages/<name>`` is restored from parquet
     instead of recomputed — restartable pipelines without an external
     workflow engine.
 
-    ``parallel=True``: independent stages run concurrently on a thread
-    pool (Spark sessions are thread-safe; each stage's action becomes a
-    concurrently-scheduled Spark job). Dependencies come from
-    stage_dependencies(); the DEFAULT edge set equals sequential order,
-    so parallelism only happens where a stage opts in with DEPENDS_ON.
-    The reference is strictly sequential (job.py:203-207) — this is the
-    scale-out extension a Spark driver makes natural.
-    """
-    plan = _prepare(job, commands, dryrun, registry)
+    Stages run on one DAG scheduler with edges from
+    stage_dependencies(), whose DEFAULT edge set is job order. At most
+    ``max_workers`` stages are in flight and the lowest-position ready
+    stage is always submitted first, so one worker (the default) runs
+    exactly the reference's sequential order (job.py:203-207) and a
+    failure leaves nothing queued behind it. With more workers, stages
+    that opt in with DEPENDS_ON run concurrently (Spark sessions are
+    thread-safe; each stage's action becomes a concurrently-scheduled
+    Spark job). Every stage runs in a copy of the caller's context and
+    with the caller's Spark local properties (job tags, job group,
+    scheduler pool), so log scopes and job attribution hold for any
+    worker count.
 
-    results_by_pos: dict[int, StageResult] = {}
+    ``ctx.previous`` is the output of the latest-position dependency
+    that has one; a dependency without output (skip:true, or a task
+    returning None) is transparent and its own dependencies are
+    searched. Under the implicit chain that is the predecessor's output.
+    """
+    import contextvars
+    import heapq
+    from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
+
+    from pyspark.util import inheritable_thread_target
+
+    from xetl_spark.plans.logctx import Scope, log_scope
+
+    plan = _prepare(job, commands, registry)
+    deps = stage_dependencies(job, plan)
+    results: dict[int, StageResult] = {}
     outputs: dict[str, DataFrame] = {}
 
-    if dryrun or not parallel:
-        from xetl_spark.plans.logctx import Scope, log_scope
+    def previous_of(i: int) -> DataFrame | None:
+        heap = [-j for j in deps[i]]
+        heapq.heapify(heap)
+        seen = set(deps[i])
+        while heap:
+            j = -heapq.heappop(heap)
+            if results[j].output is not None:
+                return results[j].output
+            for k in deps[j] - seen:
+                seen.add(k)
+                heapq.heappush(heap, -k)
+        return None
 
-        results: list[StageResult] = []
-        previous: DataFrame | None = None
-        total = len(plan)
-        with log_scope(Scope.JOB, f"Executing job: {job.name}"):
-            for i, (cmd, spec, fn, env) in enumerate(plan, 1):
-                label = cmd.name or cmd.task
-                if cmd.skip:
-                    log.info("Skipping command %s (skip=true)", label)
-                    results.append(StageResult(cmd, "skipped"))
-                    continue
-                if dryrun:
-                    log.info("DRYRUN %s task=%s env=%s", label, spec.name, env)
-                    results.append(StageResult(cmd, "dryrun"))
-                    continue
-                with log_scope(
-                    Scope.STAGE, f"Executing command: {label} ({i} of {total})"
-                ):
-                    for line in _describe_command(cmd, spec, env):
-                        log.info(line)
-                    with log_scope(
-                        Scope.TASK, f"Executing task: {spec.name}"
-                    ) as set_task_footer:
-                        try:
-                            res = _execute_stage(
-                                spark, job, cmd, spec, fn, env, outputs,
-                                previous, resume,
-                            )
-                        except TaskFailure:
-                            set_task_footer("Return code: 1")
-                            raise
-                        set_task_footer("Return code: 0")
-                if res.output is not None:
-                    if cmd.name:
-                        outputs[cmd.name] = res.output
-                        res.output.createOrReplaceTempView(cmd.name)
-                    previous = res.output
-                results.append(res)
-            log.info("Done! \\o/")
-        return results
-
-    # ---- parallel DAG schedule ----
-    import threading
-    from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
-
-    deps = stage_dependencies(job, plan)
-    lock = threading.Lock()
-    done: set[int] = set()
-    failure: list[TaskFailure] = []
-
-    def ready(pending: set[int]) -> list[int]:
-        return [i for i in pending if deps[i] <= done]
-
-    def run_one(i: int) -> int:
+    def run_one(
+        i: int, previous: DataFrame | None, outs: dict[str, DataFrame]
+    ) -> StageResult:
         cmd, spec, fn, env = plan[i]
-        # ctx.previous under explicit deps = the latest dependency's
-        # output; under the implicit chain that IS the predecessor.
-        # A dependency with no output (skip:true, or a task returning
-        # None) is transparent: walk ITS dependencies, latest-position
-        # first, exactly as the sequential loop carries `previous`
-        # unchanged across such stages.
-        import heapq
-
-        with lock:
-            prev = None
-            heap = [-j for j in deps[i]]
-            heapq.heapify(heap)
-            seen = set(deps[i])
-            while heap:
-                j = -heapq.heappop(heap)
-                r = results_by_pos.get(j)
-                if r is not None and r.output is not None:
-                    prev = r.output
-                    break
-                for k in deps[j]:
-                    if k not in seen:
-                        seen.add(k)
-                        heapq.heappush(heap, -k)
-            outs = dict(outputs)
-        res = _execute_stage(spark, job, cmd, spec, fn, env, outs, prev, resume)
-        with lock:
-            results_by_pos[i] = res
-            if res.output is not None and cmd.name:
-                outputs[cmd.name] = res.output
-                res.output.createOrReplaceTempView(cmd.name)
-        return i
-
-    pending = set(range(len(plan)))
-
-    def complete_ready_skips() -> None:
-        # a skipped stage costs no compute, but it completes only once
-        # its own deps are done — otherwise a successor resolving
-        # `previous` through it could run before the stage the skip is
-        # transparent to has produced output (sequential-mode parity)
-        progressed = True
-        while progressed:
-            progressed = False
-            for i in ready(pending):
-                cmd = plan[i][0]
-                if cmd.skip:
-                    log.info("Skipping command %s (skip=true)", cmd.name or cmd.task)
-                    with lock:
-                        results_by_pos[i] = StageResult(cmd, "skipped")
-                    done.add(i)
-                    pending.discard(i)
-                    progressed = True
-
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        futures = {}
-        while (pending or futures) and not failure:
-            complete_ready_skips()
-            for i in ready(pending):
-                pending.discard(i)
-                futures[pool.submit(run_one, i)] = i
-            if not futures:
-                if pending:  # cycle cannot happen (acyclic by construction)
-                    raise RuntimeError(f"deadlocked stages: {sorted(pending)}")
-                break
-            finished, _ = wait(futures, return_when=FIRST_COMPLETED)
-            for fut in finished:
-                i = futures.pop(fut)
+        label = cmd.name or cmd.task
+        with log_scope(Scope.STAGE, f"Executing command: {label} ({i + 1} of {len(plan)})"):
+            for line in _describe_command(cmd, spec, env):
+                log.info(line)
+            with log_scope(Scope.TASK, f"Executing task: {spec.name}") as set_task_footer:
                 try:
-                    done.add(fut.result())
-                except TaskFailure as tf:
-                    failure.append(tf)  # fail fast: stop scheduling
-    if failure:
-        raise failure[0]
-    return [results_by_pos[i] for i in range(len(plan))]
+                    res = _execute_stage(
+                        spark, job, cmd, spec, fn, env, outs, previous, resume
+                    )
+                except TaskFailure:
+                    set_task_footer("Return code: 1")
+                    raise
+                set_task_footer("Return code: 0")
+        return res
+
+    pending = list(range(len(plan)))  # ascending positions
+    running: dict[Future, int] = {}
+    failure: TaskFailure | None = None
+    with log_scope(Scope.JOB, f"Executing job: {job.name}"):
+        with ThreadPoolExecutor(max_workers=max_workers) as pool:
+            while True:
+                # every dependency points to an earlier position, so
+                # with nothing running the lowest pending stage is ready
+                while failure is None and len(running) < max_workers:
+                    i = next((i for i in pending if deps[i].issubset(results)), None)
+                    if i is None:
+                        break
+                    pending.remove(i)
+                    cmd = plan[i][0]
+                    if cmd.skip:
+                        log.info("Skipping command %s (skip=true)", cmd.name or cmd.task)
+                        results[i] = StageResult(cmd, "skipped")
+                        continue
+                    # the stage keeps the caller's context (log scopes) and
+                    # Spark local properties (job tags, job group, pool)
+                    target = inheritable_thread_target(spark)(run_one)
+                    fut = pool.submit(
+                        contextvars.copy_context().run,
+                        target, i, previous_of(i), dict(outputs),
+                    )
+                    running[fut] = i
+                if not running:
+                    break
+                finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in sorted(finished, key=running.__getitem__):
+                    i = running.pop(fut)
+                    try:
+                        res = fut.result()
+                    except TaskFailure as tf:
+                        failure = failure or tf  # fail fast: stop scheduling
+                        continue
+                    results[i] = res
+                    name = res.command.name
+                    if res.output is not None and name:
+                        outputs[name] = res.output
+                        res.output.createOrReplaceTempView(name)
+        if failure is not None:
+            raise failure
+        log.info("Done! \\o/")
+    return [results[i] for i in range(len(plan))]
 
 
 def run_report(results: list[StageResult], job: Job | None = None) -> dict[str, Any]:
@@ -701,8 +671,11 @@ def explain_job(
     registry: TaskRegistry | None = None,
 ) -> str:
     """Dry-run as EXPLAIN: the fully-resolved manifest plus each
-    stage's logical/physical plan without executing any action
-    (reference dry-run parity, job.py:160-171 + task.py:312-317)."""
+    stage's logical/physical plan (reference dry-run parity,
+    job.py:160-171 + task.py:312-317). A SINK_TASKS stage shows its
+    input's plan and writes nothing; every other task body is called to
+    build its plan, so one that runs an action while planning (a model
+    fit, a gate count, a state-store update) still runs it."""
     reg = (registry or BUILTINS).copy()
     if job.tasks:
         reg.discover(job.tasks)
@@ -719,7 +692,7 @@ def explain_job(
             spark=spark, job=job, command=cmd, env=env, outputs=outputs, previous=previous
         )
         try:
-            out = fn(ctx)
+            out = ctx.input_df() if spec.name in SINK_TASKS else fn(ctx)
         except Exception as exc:
             lines.append(f"  (plan unavailable: {exc})")
             continue
