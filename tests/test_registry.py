@@ -1,212 +1,64 @@
-"""Registry-order rotation and table-cache bounds.
+"""Registry order, import side effects, table-cache bounds and the
+registry-derived docs.
 
-The driver's correctness gate samples a ~50-entry prefix of the
-registry; these tests pin the two properties that make that sampling
-trustworthy round over round: every module family stays represented in
-any prefix (interleave), and the represented *window* of each family
-moves between rounds (rotation) so the whole registry is eventually
-driver-verified.
+Importing ``xetl_spark.queries`` only registers queries: REGISTRY
+iterates in registration order (query modules in import order, each
+module's queries in ``@query`` decorator order) and no file outside
+the package is read to decide it.
 """
 
 from __future__ import annotations
 
-from collections import Counter
+import json
+import subprocess
+import sys
+from fnmatch import fnmatch
+from itertools import groupby
+from pathlib import Path
 
 import xetl_spark.queries as Q
 
+_IMPORT_PROBE = """
+import json, os, sys
 
-def _families(names):
-    return Counter(Q.REGISTRY[n].fn.__module__.rsplit(".", 1)[-1] for n in names)
-
-
-def test_interleave_prefix_covers_every_family():
-    # neutral order (no sampled-priority) to pin the base round-robin
-    try:
-        Q._interleave_registry(sampled=frozenset())
-        prefix = list(Q.REGISTRY)[:50]
-        fams = _families(prefix)
-        n_modules = len({q.fn.__module__ for q in Q.REGISTRY.values()})
-        assert len(fams) == n_modules
-        # an even round-robin: no family hogs the window
-        assert max(fams.values()) - min(fams.values()) <= 1
-    finally:
-        Q._interleave_registry()
+opened = []
 
 
-def test_never_sampled_queries_front_loaded():
-    """The live order puts queries absent from every CORRECTNESS_r*.json
-    first, so the driver's next ~50-entry window drains the unverified
-    tail fastest (VERDICT r4 item 3)."""
-    sampled = Q._driver_sampled()
-    unsampled = set(Q.REGISTRY) - sampled
-    if not sampled or not unsampled:  # degenerate repos: nothing to order
-        return
-    order = list(Q.REGISTRY)
-    k = min(50, len(unsampled))
-    assert set(order[:k]) <= unsampled
-    # and the partition is exact: all unsampled precede all sampled
-    first_sampled = next(i for i, n in enumerate(order) if n in sampled)
-    assert all(n in sampled for n in order[first_sampled:])
+def hook(event, args):
+    if event == "open" and isinstance(args[0], (str, bytes, os.PathLike)):
+        opened.append(os.path.basename(os.fsdecode(args[0])))
 
 
-def test_never_sampled_rank_strictly_ahead_of_drift_resamples():
-    """Two-level front-load key (VERDICT r12 item 2): a query that has
-    NEVER appeared in any driver window outranks a drift-resample
-    (sampled green once, rewritten since), which outranks a verified
-    name — so a large rewrite batch cannot crowd a never-sampled query
-    out of the ~50-slot window."""
-    ever = Q._ever_sampled()
-    sampled = Q._driver_sampled()
-    assert sampled <= ever  # verified is a subset of ever-sampled
-    order = list(Q.REGISTRY)
-    keys = [(n in ever, n in sampled) for n in order]
-    assert keys == sorted(keys)
-    # synthetic check independent of repo state: drift block sits
-    # between never-sampled and verified under explicit sets
-    names = list(Q.REGISTRY)
-    try:
-        Q._interleave_registry(
-            offset=0,
-            sampled=frozenset(names[: len(names) // 2]),
-            ever=frozenset(names[: 3 * len(names) // 4]),
-        )
-        got = list(Q.REGISTRY)
-        ever_s = frozenset(names[: 3 * len(names) // 4])
-        samp_s = frozenset(names[: len(names) // 2])
-        gk = [(n in ever_s, n in samp_s) for n in got]
-        assert gk == sorted(gk)
-        assert {k for k in gk} == {(False, False), (True, False), (True, True)}
-    finally:
-        Q._interleave_registry()
+sys.addaudithook(hook)
+import xetl_spark.queries as Q
+
+print(json.dumps({
+    "opened": opened,
+    "imported": [m for m in sys.modules if m.startswith("xetl_spark.queries.")],
+    "registry": [q.fn.__module__ for q in Q.REGISTRY.values()],
+}))
+"""
 
 
-def _n_families():
-    return len({q.fn.__module__ for q in Q.REGISTRY.values()})
-
-
-def test_rotation_moves_the_sampled_window():
-    step = Q._rotation_step(_n_families())
-    try:
-        Q._interleave_registry(offset=0, sampled=frozenset())
-        base = list(Q.REGISTRY)[:50]
-        Q._interleave_registry(offset=step, sampled=frozenset())
-        shifted = list(Q.REGISTRY)[:50]
-        fresh = set(shifted) - set(base)
-        # one rotation step swaps most of the window (families no larger
-        # than the window wrap onto themselves and contribute no churn)
-        assert len(fresh) >= 25
-        assert _families(shifted) == _families(base)
-    finally:
-        Q._interleave_registry()  # restore the round-derived order
-
-
-def test_rotation_sweeps_whole_registry_over_rounds():
-    step = Q._rotation_step(_n_families())
-    # step never exceeds the per-family window (50 // n_families), so
-    # consecutive windows tile each family list with no skipped entries
-    assert step <= max(1, 50 // _n_families())
-    biggest = max(
-        sum(1 for q in Q.REGISTRY.values() if q.fn.__module__ == m)
-        for m in {q.fn.__module__ for q in Q.REGISTRY.values()}
+def test_import_reads_no_harness_files():
+    """A fresh interpreter importing the registry opens none of the
+    round-driver records kept at the repo root, and REGISTRY groups
+    each query module's entries contiguously, in module import order."""
+    out = subprocess.run(
+        [sys.executable, "-c", _IMPORT_PROBE],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True,
+        text=True,
+        check=True,
     )
-    rounds = -(-biggest // step) + biggest  # tile + wrap slack
-    try:
-        seen: set[str] = set()
-        for rnd in range(rounds):
-            Q._interleave_registry(offset=step * rnd, sampled=frozenset())
-            seen.update(list(Q.REGISTRY)[:50])
-        assert seen == set(Q.REGISTRY)
-    finally:
-        Q._interleave_registry()
+    probe = json.loads(out.stdout.strip().splitlines()[-1])
+    records = ("PROGRESS.jsonl", "CORRECTNESS_r*.json", "QUERY_SOURCE_HASHES.json")
+    read = [f for f in probe["opened"] if any(fnmatch(f, pat) for pat in records)]
+    assert not read, read
 
-
-def test_round_number_reads_progress_log(tmp_path, monkeypatch):
-    assert isinstance(Q._round_number(), int)
-
-
-def test_source_hashes_cover_registry_and_track_operator_modules():
-    """Every registered query has a stable fingerprint, and the
-    fingerprint of a query that body-imports an operator module folds
-    that module's file content in (so an operator rewrite invalidates
-    exactly its callers' samples)."""
-    h1 = Q.source_hashes()
-    assert set(h1) == set(Q.REGISTRY)
-    assert Q.source_hashes() == h1  # deterministic
-    # q_text_char_entropy body-imports operators.text: its fingerprint
-    # must differ from a same-source query that doesn't (i.e. hashes
-    # are not just fn-source hashes — collision across names is fine,
-    # but a dependency-free recompute must not equal it)
-    import hashlib
-    import inspect
-
-    q = Q.REGISTRY["q_text_char_entropy"]
-    bare = hashlib.sha256()
-    bare.update(inspect.getsource(q.fn).encode())
-    bare.update((q.oracle or "").encode())
-    assert h1["q_text_char_entropy"] != bare.hexdigest()
-
-
-def test_rewritten_queries_treated_as_unsampled(tmp_path):
-    """Re-sample-on-rewrite (VERDICT r8 item 5): a clean sample is
-    invalidated by (a) a manual `rewritten` round newer than the
-    sample, or (b) a recorded snapshot fingerprint that disagrees
-    with the current source hash; an agreeing snapshot keeps it."""
-    import json
-
-    names = list(Q.REGISTRY)[:3]
-    a, b, c = names
-    latest = {a: (5, True), b: (5, True), c: (5, True)}
-    cur = Q.source_hashes()
-    side = tmp_path / "h.json"
-    side.write_text(
-        json.dumps(
-            {
-                "rewritten": {a: 6},
-                "snapshots": [
-                    # round-5 snapshot: b drifted, c matches current
-                    {"round": 5, "hashes": {b: "stale-fingerprint", c: cur[c]}},
-                    # newer snapshot must NOT apply to round-5 samples
-                    {"round": 7, "hashes": {b: cur[b], c: "x"}},
-                ],
-            }
-        )
-    )
-    stale = Q._stale_rewrites(latest, sidecar_path=side)
-    assert stale == {a, b}
-    # no sidecar -> nothing stale (legacy behavior)
-    assert Q._stale_rewrites(latest, sidecar_path=tmp_path / "nope.json") == set()
-
-
-def test_record_query_hashes_tool_roundtrip(tmp_path, monkeypatch):
-    """The recorder writes a snapshot for the requested round that the
-    registry then reads back as in-sync (nothing stale)."""
-    import importlib.util
-    import json
-    import sys
-    from pathlib import Path
-
-    # exercise main() in-process against a scratch sidecar (tools/ is
-    # not a package — load the module by path)
-    spec = importlib.util.spec_from_file_location(
-        "record_query_hashes",
-        Path(__file__).resolve().parents[1] / "tools" / "record_query_hashes.py",
-    )
-    rec = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(rec)
-
-    monkeypatch.setattr(rec, "REPO", tmp_path)
-    monkeypatch.setattr(sys, "argv", ["rec", "--round", "5"])
-    rec.main()
-    data = json.loads((tmp_path / "QUERY_SOURCE_HASHES.json").read_text())
-    assert data["snapshots"][-1]["round"] == 5
-    assert set(data["snapshots"][-1]["hashes"]) == set(Q.REGISTRY)
-    latest = {n: (5, True) for n in list(Q.REGISTRY)[:5]}
-    assert (
-        Q._stale_rewrites(
-            latest, sidecar_path=tmp_path / "QUERY_SOURCE_HASHES.json"
-        )
-        == set()
-    )
+    runs = [m for m, _ in groupby(probe["registry"])]
+    assert len(runs) == len(set(runs)), f"query module split in REGISTRY: {runs}"
+    assert runs == [m for m in probe["imported"] if m in runs]
 
 
 def test_table_cache_evicts_oldest_scope(spark, tmp_path):

@@ -24,11 +24,7 @@ def main() -> None:
         "| # | query | verify | what it covers |",
         "|---|---|---|---|",
     ]
-    # canonical registration order: stable across rounds (REGISTRY
-    # iteration order rotates per driver round for sampling coverage)
-    order = Q._CANONICAL_ORDER or list(Q.REGISTRY)
-    for i, name in enumerate(order, 1):
-        q = Q.REGISTRY[name]
+    for i, (name, q) in enumerate(Q.REGISTRY.items(), 1):
         doc = " ".join((q.doc or "").split())
         if len(doc) > 110:
             doc = doc[:107] + "..."

@@ -43,12 +43,14 @@ LEGS: list[tuple[str, list[str]]] = [
     # canaries that MUST hold even on --fast spot checks: the inventory
     # docs match the registry and every registered query actually builds
     # + canonicalizes against the real testdata (round-10's red row came
-    # from a snapshot shipped without running exactly these), and the
+    # from a snapshot shipped without running exactly these), importing
+    # the registry reads no file outside the package, and the
     # stage-metrics reader the movement gate depends on still reads.
     (
         "registry-canary",
         [
             sys.executable, "-m", "pytest", "-q",
+            "tests/test_registry.py::test_import_reads_no_harness_files",
             "tests/test_registry.py::test_inventory_md_matches_registry",
             "tests/test_registry.py::test_coverage_md_counts_match_registry",
             "tests/test_registry.py::test_every_query_output_is_canonicalizable",

@@ -17,11 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# round-count telemetry of the LAST connected_components call (each
-# round is one scheduler job at scale — the cost the r15 double-jump
-# halves); read by tests and profiling, never by product code
-_LAST_ROUNDS = 0
-
 
 def connected_components(
     edges: DataFrame,
@@ -89,11 +84,8 @@ def connected_components(
             ).alias("comp"),
         )
 
-    global _LAST_ROUNDS
-    _LAST_ROUNDS = 0
     prev_sum = None
     for _ in range(max_iter):
-        _LAST_ROUNDS += 1
         # each node's candidate label: min over its own and neighbors'
         nbr_min = (
             sym.join(labels, sym.b == labels.node)

@@ -20,6 +20,8 @@ from __future__ import annotations
 
 import struct
 
+from xetl_spark.operators.flac import _crc8
+
 # ---------------------------------------------------------------- mp3
 
 # bitrate kbps tables, index 1..14 (0=free, 15=bad): [MPEG1 L3, MPEG2/2.5 L3]
@@ -1341,17 +1343,6 @@ _FLAC_RATES = {
     1: 88200, 2: 176400, 3: 192000, 4: 8000, 5: 16000, 6: 22050,
     7: 24000, 8: 32000, 9: 44100, 10: 48000, 11: 96000,
 }
-
-
-def _crc8(data: bytes) -> int:
-    """CRC-8, polynomial x^8+x^2+x+1 (0x07), init 0 — the FLAC frame
-    header checksum."""
-    crc = 0
-    for byte in data:
-        crc ^= byte
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x07) & 0xFF if crc & 0x80 else (crc << 1) & 0xFF
-    return crc
 
 
 def _flac_coded_number(b: bytes, pos: int):

@@ -316,14 +316,7 @@ def ivfpq_fit(
     k-means on the bounded content-hash-ordered sample, then residual
     codebooks per subspace — exactly the inline build ivfpq_topk runs
     when not prefit (extracted r14 so production refits once)."""
-    sample = (
-        corpus.select(F.col(vec_col).alias("v"))
-        .withColumn("__h", F.md5(F.col("v").cast("string")))
-        .orderBy("__h")  # column, not expression — see _fit_sample
-        .limit(_MAX_FIT_SAMPLE)
-        .collect()
-    )
-    x = np.asarray([r.v for r in sample], dtype=np.float64)
+    x = _fit_sample(corpus, vec_col)
     cells = _kmeans_np(x, n_cells, seed)
     # residual codebooks fit on the sample's residuals
     assign = ((x[:, None, :] - cells[None, :, :]) ** 2).sum(-1).argmin(1)

@@ -137,7 +137,8 @@ def oracles() -> dict[str, str]:
     return {name: q.oracle for name, q in REGISTRY.items() if q.oracle}
 
 
-# Import side-effect registration.
+# Import side-effect registration: REGISTRY iterates in this module
+# order, each module's queries in the order of their @query decorators.
 from xetl_spark.queries import relational  # noqa: E402,F401
 from xetl_spark.queries import relational2  # noqa: E402,F401
 from xetl_spark.queries import window  # noqa: E402,F401
@@ -151,382 +152,3 @@ from xetl_spark.queries import udf_surface  # noqa: E402,F401
 from xetl_spark.queries import tpch_suite  # noqa: E402,F401
 from xetl_spark.queries import training_pipeline  # noqa: E402,F401
 from xetl_spark.queries import docformats  # noqa: E402,F401
-
-
-def _round_number() -> int:
-    """Current driver round, read from PROGRESS.jsonl (0 if absent).
-
-    The driver appends one JSON line per heartbeat, each carrying a
-    monotone ``round`` field; the max over the file is the live round.
-    Stable within a round (every heartbeat of a round repeats the same
-    number), so the registry order can depend on it deterministically.
-    """
-    import json
-    from pathlib import Path
-
-    path = Path(__file__).resolve().parents[2] / "PROGRESS.jsonl"
-    best = 0
-    try:
-        for line in path.read_text().splitlines():
-            try:
-                best = max(best, int(json.loads(line).get("round", 0)))
-            except (ValueError, AttributeError, TypeError):
-                continue
-    except OSError:
-        pass
-    return best
-
-
-def _rotation_step(n_families: int) -> int:
-    """Positions each family's list rotates per driver round: the
-    per-family share of a 50-entry sampled prefix, floored at 1. Kept
-    ≤ the window size so consecutive rounds' windows tile the family
-    list without gaps (a larger step would permanently skip entries)."""
-    return max(1, 50 // max(1, n_families))
-
-
-def source_hashes() -> dict[str, str]:
-    """Per-query implementation fingerprint: sha256 over the query
-    fn's own source + its oracle SQL + the FILE contents of every
-    ``xetl_spark`` module the fn's body locally imports from (the
-    repo convention — query fns import operators inside the body, so
-    an operator rewrite changes the fingerprint of exactly the
-    queries that call it, at module granularity).
-
-    Used by the re-sample-on-rewrite front-loading: a query whose
-    fingerprint changed since its last driver sample is treated as
-    never-sampled again, so a rewrite can't coast indefinitely on a
-    stale green row (VERDICT r8 item 5).
-
-    Round 10: module-TOP imports are now tracked too — for each
-    ``from xetl_spark... import name`` at the top of the fn's defining
-    module, if the fn's source references ``name``, the defining
-    module of ``name`` joins the dependency set. This closed the r9
-    gap where ``q_text_repetition_signals`` (which calls
-    ``text.repetition_signals`` through llm_ops' top-level
-    ``from xetl_spark.operators import text``) kept a stable
-    fingerprint across an operators/text.py rewrite. The
-    ``xetl_spark.queries`` package itself is excluded (``load`` /
-    ``query`` are harness plumbing — hashing this file into every
-    fingerprint would mark the whole registry stale on any
-    front-loading tweak)."""
-    import hashlib
-    import importlib
-    import inspect
-    import re
-
-    mod_file_hash: dict[str, str | None] = {}
-
-    def _file_hash(modname: str) -> str | None:
-        if modname not in mod_file_hash:
-            try:
-                mod = importlib.import_module(modname)
-                src = inspect.getsource(mod)
-                mod_file_hash[modname] = hashlib.sha256(
-                    src.encode()
-                ).hexdigest()
-            except (ImportError, OSError, TypeError):
-                mod_file_hash[modname] = None
-        return mod_file_hash[modname]
-
-    # two forms so the symbol list can't greedily swallow the next
-    # statement (the old single regex matched "a\nfrom xetl_spark" as
-    # one symbol list, minting a phantom "xetl_spark" binding)
-    imp_paren_re = re.compile(
-        r"^\s*from\s+(xetl_spark(?:\.\w+)*)\s+import\s+\(([^)]*)\)", re.M
-    )
-    imp_line_re = re.compile(
-        r"^\s*from\s+(xetl_spark(?:\.\w+)*)\s+import\s+([^(\n]+)$", re.M
-    )
-    sym_re = re.compile(r"^\w+(?:\s+as\s+\w+)?$")
-
-    def _iter_imports(text: str):
-        """Yield (module, [symbol-or-'x as y', ...]) for every
-        ``from xetl_spark... import ...`` in ``text``."""
-        for rx in (imp_paren_re, imp_line_re):
-            for m in rx.finditer(text):
-                # strip a trailing comment before splitting — otherwise
-                # "import text  # note" yields the symbol "text  # note",
-                # fails sym_re, and the dependency silently goes untracked
-                symtext = m.group(2).split("#", 1)[0]
-                syms = [
-                    s.strip()
-                    for s in symtext.split(",")
-                    if s.strip() and sym_re.match(s.strip())
-                ]
-                if syms:
-                    yield m.group(1), syms
-
-    def _resolve(modname: str, sym: str) -> str:
-        """Defining module of ``sym`` imported from ``modname``: a
-        submodule import resolves to the submodule itself (probed by
-        import, not getattr — getattr's result depends on what happens
-        to be loaded already); re-exported functions resolve to their
-        defining module."""
-        try:
-            importlib.import_module(f"{modname}.{sym}")
-            return f"{modname}.{sym}"
-        except ImportError:
-            pass
-        try:
-            mod = importlib.import_module(modname)
-        except ImportError:
-            return modname
-        obj = getattr(mod, sym, None)
-        return getattr(obj, "__module__", None) or modname
-
-    def _code_tokens(src: str) -> str:
-        """Source with string/comment tokens dropped, so a binding
-        named ``text`` isn't "referenced" by the column literal
-        ``F.col("text")`` or a docstring mentioning it. Falls back to
-        the raw source if tokenization fails (over-inclusion is safe —
-        it only re-samples more)."""
-        import io
-        import textwrap
-        import tokenize
-
-        try:
-            return " ".join(
-                t.string
-                for t in tokenize.generate_tokens(
-                    io.StringIO(textwrap.dedent(src)).readline
-                )
-                if t.type not in (tokenize.COMMENT, tokenize.STRING)
-            )
-        except (tokenize.TokenError, IndentationError, SyntaxError):
-            return src
-
-    top_bindings_cache: dict[str, dict[str, str]] = {}
-
-    def _top_bindings(defmod: str) -> dict[str, str]:
-        """{local binding name: defining module} for every xetl_spark
-        symbol imported at the TOP of ``defmod`` (harness package
-        xetl_spark.queries excluded — see docstring)."""
-        if defmod in top_bindings_cache:
-            return top_bindings_cache[defmod]
-        bindings: dict[str, str] = {}
-        try:
-            msrc = inspect.getsource(importlib.import_module(defmod))
-        except (ImportError, OSError, TypeError):
-            top_bindings_cache[defmod] = bindings
-            return bindings
-        for modname, syms in _iter_imports(msrc):
-            if modname == "xetl_spark.queries":
-                continue
-            for sym in syms:
-                parts = sym.split()
-                target, local = parts[0], parts[-1]  # "x" or "x as y"
-                bindings[local] = _resolve(modname, target)
-        top_bindings_cache[defmod] = bindings
-        return bindings
-
-    out: dict[str, str] = {}
-    for name, q in REGISTRY.items():
-        try:
-            src = inspect.getsource(q.fn)
-        except (OSError, TypeError):
-            src = name
-        h = hashlib.sha256()
-        h.update(src.encode())
-        h.update((q.oracle or "").encode())
-        deps: set[str] = set()
-        for modname, syms in _iter_imports(src):
-            for sym in syms:
-                deps.add(_resolve(modname, sym.split()[0]))
-        code_only = _code_tokens(src)
-        for binding, dep in _top_bindings(
-            getattr(q.fn, "__module__", "") or ""
-        ).items():
-            if re.search(rf"\b{re.escape(binding)}\b", code_only):
-                deps.add(dep)
-        for dep in sorted(deps):
-            fh = _file_hash(dep)
-            h.update(f"{dep}={fh}".encode())
-        out[name] = h.hexdigest()
-    return out
-
-
-def _stale_rewrites(
-    latest: dict[str, tuple[int, bool]], sidecar_path=None
-) -> set[str]:
-    """Queries whose implementation changed AFTER their latest clean
-    driver sample, per the ``QUERY_SOURCE_HASHES.json`` sidecar:
-
-    - ``rewritten`` — manual {name: round} seed: samples from rounds
-      strictly before the rewrite round are stale (bootstraps rounds
-      that predate snapshot recording).
-    - ``snapshots`` — [{"round": N, "hashes": {...}}] recorded by
-      ``tools/record_query_hashes.py`` at each round end (the code
-      state ``CORRECTNESS_rN.json`` is computed from). A sample at
-      round R is stale when the newest snapshot with round ≤ R
-      disagrees with the current ``source_hashes()`` fingerprint.
-    """
-    import json
-    from pathlib import Path
-
-    path = Path(
-        sidecar_path
-        or Path(__file__).resolve().parents[2] / "QUERY_SOURCE_HASHES.json"
-    )
-    try:
-        sidecar = json.loads(path.read_text())
-    except (OSError, ValueError):
-        return set()
-    if not isinstance(sidecar, dict):
-        return set()
-    rewritten = sidecar.get("rewritten") or {}
-    snapshots = [
-        s
-        for s in (sidecar.get("snapshots") or [])
-        if isinstance(s, dict) and isinstance(s.get("hashes"), dict)
-    ]
-    stale: set[str] = set()
-    current: dict[str, str] | None = None  # computed lazily, once
-    for name, (rnd, clean) in latest.items():
-        if not clean or name not in REGISTRY:
-            continue
-        try:
-            if int(rewritten.get(name, -1)) > rnd:
-                stale.add(name)
-                continue
-        except (TypeError, ValueError):
-            pass
-        eligible = [s for s in snapshots if int(s.get("round", -1)) <= rnd]
-        if not eligible:
-            continue
-        snap = max(eligible, key=lambda s: int(s.get("round", -1)))
-        recorded = snap["hashes"].get(name)
-        if recorded is None:
-            continue
-        if current is None:
-            current = source_hashes()
-        if recorded != current.get(name, recorded):
-            stale.add(name)
-    return stale
-
-
-def _latest_samples() -> dict[str, tuple[int, bool]]:
-    """name -> (latest round sampled, clean?) from CORRECTNESS_r*.json."""
-    import json
-    import re
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parents[2]
-    latest: dict[str, tuple[int, bool]] = {}  # name -> (round, clean)
-    for p in root.glob("CORRECTNESS_r*.json"):
-        m = re.search(r"_r(\d+)", p.name)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            data = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, rec in data.items():
-            # "clean" = the Spark side actually produced rows; P-class
-            # rows-only records (err == "no_oracle", spark_rows set)
-            # count, a harness/query failure (spark_rows null) does not
-            clean = not isinstance(rec, dict) or rec.get("spark_rows") is not None
-            if name not in latest or rnd > latest[name][0]:
-                latest[name] = (rnd, clean)
-    return latest
-
-
-def _ever_sampled() -> frozenset[str]:
-    """Names whose latest driver sample was clean at ANY fingerprint —
-    even if the implementation was rewritten since. Used as the first
-    key of the front-load sort: a truly-never-sampled query ranks
-    strictly ahead of a drift-resample (VERDICT r12 item 2 — 62
-    rewritten fingerprints were crowding never-sampled names out of
-    the 50-slot window)."""
-    return frozenset(
-        n for n, (_r, clean) in _latest_samples().items() if clean
-    )
-
-
-def _driver_sampled() -> frozenset[str]:
-    """Query names whose LATEST driver correctness sample was clean
-    (``CORRECTNESS_r*.json`` at the repo root — one key per sampled
-    query) AND whose implementation is unchanged since that sample
-    (per _stale_rewrites). Used to front-load the others so the
-    driver's ~50-entry window drains the unverified tail first. A
-    query whose most recent sample carries an ``err`` (e.g. a harness
-    canonicalization failure) counts as UNSAMPLED again: its green
-    status is stale-broken until a later window re-samples it clean;
-    likewise a query rewritten after its last sample."""
-    latest = _latest_samples()
-    stale = _stale_rewrites(latest)
-    return frozenset(
-        n for n, (_r, clean) in latest.items() if clean and n not in stale
-    )
-
-
-def _interleave_registry(
-    offset: int | None = None,
-    sampled: frozenset[str] | None = None,
-    ever: frozenset[str] | None = None,
-) -> None:
-    """Round-robin the registry across source modules, rotated per round.
-
-    External correctness harnesses sample a ~50-entry prefix of the
-    registry; a module-ordered dict means that prefix is all relational
-    queries and a regression anywhere else goes unsampled. Interleaving
-    one query per family per tier puts every family (scans, windows,
-    scalars, streaming, LLM ops, UDFs, SQL surface) inside any prefix
-    of ~10+.
-
-    A static order would also re-verify the *same* prefix every round,
-    so each family's list is additionally rotated per driver round by
-    the per-family window size (≈ 50-prefix ÷ family count, via
-    _rotation_step): the step must not exceed the window, or each
-    round's rotation would skip past entries the previous round never
-    sampled. Round N thus samples a fresh window of each family while
-    keeping the per-family coverage guarantee, and over successive
-    rounds the windows sweep the whole registry.
-
-    On top of the rotation, queries that have never appeared in ANY
-    prior driver window (per CORRECTNESS_r*.json) are stably moved to
-    the front: rotation alone drains the unverified tail at ~40 fresh
-    names/round, while front-loading makes the next window exactly the
-    never-sampled set until it's empty (then the sort is a no-op and
-    pure rotation resumes). The sort key is two-level (r12 fix):
-    truly-never-sampled names rank strictly ahead of drift-resamples
-    (sampled green once, rewritten since), which rank ahead of
-    currently-verified names — a large rewrite batch can no longer
-    crowd a never-sampled query out of the 50-slot window. Stable sort
-    preserves the family interleave inside each block, so a >10-entry
-    prefix still touches every family that has unsampled queries.
-    """
-    from itertools import zip_longest
-
-    # group from the immutable registration order, not the current (already
-    # interleaved) REGISTRY order, so repeated calls don't compound rotations
-    global _CANONICAL_ORDER
-    if _CANONICAL_ORDER is None:
-        _CANONICAL_ORDER = list(REGISTRY)
-    groups: dict[str, list[str]] = {}
-    for name in _CANONICAL_ORDER:
-        q = REGISTRY[name]
-        groups.setdefault(q.fn.__module__.rsplit(".", 1)[-1], []).append(name)
-    if offset is None:
-        offset = _rotation_step(len(groups)) * _round_number()
-    if sampled is None:
-        sampled = _driver_sampled()
-        if ever is None:
-            ever = _ever_sampled()
-    if ever is None:
-        # explicit `sampled` without `ever` (tests pinning a neutral
-        # order): collapse to the single-level key
-        ever = sampled
-    rotated = [g[offset % len(g) :] + g[: offset % len(g)] for g in groups.values()]
-    order = [n for tier in zip_longest(*rotated) for n in tier if n]
-    # stable two-level: never-sampled < drift-resample < verified
-    order.sort(key=lambda n: (n in ever, n in sampled))
-    reordered = {n: REGISTRY[n] for n in order}
-    REGISTRY.clear()
-    REGISTRY.update(reordered)
-
-
-_CANONICAL_ORDER: list[str] | None = None
-
-_interleave_registry()
