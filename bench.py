@@ -128,6 +128,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     load_start = os.getloadavg()
     import xetl_spark.queries as Q
+    from xetl_spark.profile import crossing_ms as crossing_probe_ms
     from xetl_spark.session import get_session
 
     spark = get_session("bench")
@@ -168,24 +169,10 @@ def main() -> None:
     load_legs: dict[str, float] = {}
     leg_retries: list[str] = []
 
-    def crossing_probe() -> float:
-        """Host-regime telemetry the loadavg gate cannot see (r14): the
-        wall of a fixed 32-task identity mapInPandas round-trip. The
-        JVM↔Python crossing latency on this shared host is bimodal —
-        the same codec-battery query has measured 0.75s and 2.2s in one
-        day at loadavg < 4 both times, tracking this probe — so record
-        the regime with the run (telemetry only; no gating)."""
-        probe = spark.range(0, 256).repartition(32).mapInPandas(
-            lambda it: it, schema="id long"
-        )
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            probe.count()
-            best = min(best or 9e9, time.time() - t0)
-        return round(best * 1000)
-
-    crossing_ms = crossing_probe()
+    # host-regime telemetry the loadavg gate cannot see (r14): the
+    # same codec-battery query has measured 0.75s and 2.2s in one day
+    # at loadavg < 4 both times, tracking this probe (no gating)
+    crossing_ms = crossing_probe_ms(spark)
 
     def run_leg(
         leg: str,
@@ -315,7 +302,7 @@ def main() -> None:
         # per-query best kept); empty = every leg ran under the gate
         "leg_retries": leg_retries,
         # JVM↔Python crossing regime at run start (ms; see
-        # crossing_probe) — interpret codec-battery / mapInPandas
+        # profile.crossing_ms) — interpret codec-battery / mapInPandas
         # query movement against this, not just loadavg
         "python_crossing_ms": crossing_ms,
         "action": "noop_write", "sf": float(sf) if sf.replace(".", "").isdigit() else sf,

@@ -253,7 +253,7 @@ def test_sql_string_operators_quote_backtick_column_names(spark, docs):
     name must neither break the parse nor resolve elsewhere. Results
     equal the plainly named run."""
     from xetl_spark.operators.dedup import hamming_near_pairs, simhash_rowwise
-    from xetl_spark.operators.text import c4_line_filter
+    from xetl_spark.operators.text import c4_line_filter, repetition_signals
 
     txt, did, fp = "my`text col", "doc.id", "f`p"
     odd = docs.select(F.col("doc_id").alias(did), F.col("text").alias(txt))
@@ -267,6 +267,12 @@ def test_sql_string_operators_quote_backtick_column_names(spark, docs):
     assert rows(c4_line_filter(odd, txt, did, min_sentences=0)) == rows(
         c4_line_filter(docs, "text", "doc_id", min_sentences=0)
     )
+    # the id column also names a field of a DDL schema string
+    for id_name in (did, "doc id"):
+        odd_id = odd.withColumnRenamed(did, id_name)
+        assert rows(repetition_signals(odd_id, txt, id_name)) == rows(
+            repetition_signals(docs, "text", "doc_id")
+        )
     odd_fps = fps.select(F.col("doc").alias(did), F.col("simhash").alias(fp))
     near = rows(hamming_near_pairs(fps, "simhash", "doc"))
     assert (0, 1, 0) in near

@@ -18,6 +18,8 @@ from pathlib import Path
 
 import xetl_spark.queries as Q
 
+REPO = Path(__file__).resolve().parents[1]
+
 _IMPORT_PROBE = """
 import json, os, sys
 
@@ -46,7 +48,7 @@ def test_import_reads_no_harness_files():
     each query module's entries contiguously, in module import order."""
     out = subprocess.run(
         [sys.executable, "-c", _IMPORT_PROBE],
-        cwd=Path(__file__).resolve().parents[1],
+        cwd=REPO,
         capture_output=True,
         text=True,
         check=True,
@@ -93,7 +95,7 @@ def test_inventory_md_matches_registry():
     expensive, so it fails the suite."""
     import re
 
-    text = open("/root/repo/INVENTORY.md").read()
+    text = (REPO / "INVENTORY.md").read_text()
     m = re.search(r"Total: (\d+) queries — (\d+) hash-verified, (\d+)", text)
     assert m, "INVENTORY.md missing generated total line"
     n_total, n_h, n_p = map(int, m.groups())
@@ -136,7 +138,7 @@ def test_coverage_md_counts_match_registry():
     generated-file version of this canary)."""
     import re
 
-    text = open("/root/repo/COVERAGE.md").read()
+    text = (REPO / "COVERAGE.md").read_text()
     m = re.search(r"(\d+) registered queries: (\d+) H, (\d+) P", text)
     assert m, "COVERAGE.md missing the counts line"
     n_total, n_h, n_p = map(int, m.groups())

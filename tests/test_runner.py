@@ -183,6 +183,39 @@ def test_task_failure_aborts(spark):
     assert ran == []
 
 
+def test_dryrun_skips_like_run_job(spark):
+    """explain_job follows run_job's skip rule: a skip:true stage's body
+    is not called, and the stage after it explains the input the real
+    run reads (a skipped stage is transparent to ``previous``)."""
+    reg = BUILTINS.copy()
+    called, seen = [], []
+
+    @task("boom", registry=reg)
+    def boom(ctx):
+        called.append(1)
+        raise RuntimeError("kaboom")
+
+    @task("peek", registry=reg)
+    def peek(ctx):
+        seen.append(ctx.input_df().columns)
+        return ctx.input_df()
+
+    job = _job(
+        f"""
+        name: skipdry
+        commands:
+          - {{name: src, task: read_parquet, env: {{PATH: {SF}/region.parquet}}}}
+          - {{name: broken, task: boom, skip: true}}
+          - {{name: after, task: peek}}
+        """
+    )
+    text = explain_job(spark, job, registry=reg)
+    assert called == [] and "plan unavailable" not in text
+    run_job(spark, job, registry=reg)
+    assert called == []
+    assert seen == [["r_regionkey", "r_name"]] * 2
+
+
 def test_data_dir_guard(spark):
     job = _job(
         """

@@ -14,10 +14,12 @@ from __future__ import annotations
 import sys
 import time
 from collections import defaultdict
+from pathlib import Path
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 SF_DIR = "/root/testdata/sf0.1"
 K = 10
@@ -201,7 +203,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     corpora = [SF_DIR]
-    sf1 = "/root/repo/.sfdata/sf1"
+    sf1 = str(REPO / ".sfdata" / "sf1")
     if os.path.isdir(sf1):
         corpora.append(sf1)
 
@@ -247,7 +249,7 @@ def main() -> None:
         for name, rec, dt in results:
             lines.append(f"| {name} | {rec:.2f} | {dt:.2f} |")
     lines.append("")
-    with open("/root/repo/ANN.md", "w") as fh:
+    with open(REPO / "ANN.md", "w") as fh:
         fh.write("\n".join(lines))
     print("wrote ANN.md")
 

@@ -4,7 +4,7 @@ Round-14 deliverable: `plans/r14/<query>_before.txt` / `..._after.txt`
 (the judge cannot run Spark and checks plan claims against these files).
 
 Usage:
-  python tools/capture_plans.py --repo /root/repo --out plans/r14 \
+  python tools/capture_plans.py [--repo CHECKOUT] --out plans/r14 \
       --suffix _after [--sf /root/testdata/sf0.001] [query ...]
 
 With no query names, captures every registry query except streaming
@@ -20,11 +20,14 @@ import io
 import os
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--repo", default="/root/repo")
+    ap.add_argument("--repo", default=str(REPO))
     ap.add_argument("--out", default="plans/r14")
     ap.add_argument("--suffix", default="_after")
     ap.add_argument("--sf", default="/root/testdata/sf0.001")

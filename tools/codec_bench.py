@@ -14,10 +14,12 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 
 def _mbps(nbytes: int, fn, reps: int = 3) -> float:
@@ -265,7 +267,7 @@ def main() -> int:
     ]
     for name, direction, v in rows:
         lines.append(f"| {name} | {direction} | {v:.2f} |")
-    open("/root/repo/CODECS.md", "w").write("\n".join(lines) + "\n")
+    open(REPO / "CODECS.md", "w").write("\n".join(lines) + "\n")
     print("wrote CODECS.md")
     for name, direction, v in rows:
         print(f"{name:20s} {direction:7s} {v:8.2f} MB/s")

@@ -9,8 +9,10 @@ from __future__ import annotations
 import io
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 HEADLINE = [
     "q_agg_pricing_summary",
@@ -74,7 +76,7 @@ def main() -> None:
             df.explain("formatted")
         note = f"{NOTES[name]}\n\n" if name in NOTES else ""
         out.append(f"## {name}\n\n{note}```\n{buf.getvalue().strip()}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(REPO / "PLANS.md", "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 

@@ -6,8 +6,10 @@ Usage: python tools/gen_inventory.py
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 
 def main() -> None:
@@ -35,7 +37,7 @@ def main() -> None:
         f"Total: {len(Q.REGISTRY)} queries — {n_h} hash-verified, "
         f"{len(Q.REGISTRY) - n_h} property-tested.",
     ]
-    with open("/root/repo/INVENTORY.md", "w") as f:
+    with open(REPO / "INVENTORY.md", "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote INVENTORY.md ({len(Q.REGISTRY)} queries)")
 
@@ -44,7 +46,7 @@ def main() -> None:
     # hand twice in rounds 2 and 4; tests/test_registry.py pins both)
     import re
 
-    cov_path = "/root/repo/COVERAGE.md"
+    cov_path = REPO / "COVERAGE.md"
     cov = open(cov_path).read()
     new_counts = (
         f"{len(Q.REGISTRY)} registered queries: {n_h} H, {len(Q.REGISTRY) - n_h} P"

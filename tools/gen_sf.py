@@ -27,15 +27,18 @@ Perturbations that keep scale queries honest:
   watermark/window semantics and date-filter selectivities carry over.
 
 Usage: python tools/gen_sf.py [N] [BASE_DIR] [OUT_DIR]
-Defaults: 10 /root/testdata/sf0.1 /root/repo/.sfdata/sf1
+Defaults: 10 /root/testdata/sf0.1 <repo>/.sfdata/sf1
 """
 
 from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
 import duckdb
+
+REPO = Path(__file__).resolve().parents[1]
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -146,7 +149,7 @@ def generate(n_copies: int, base: str, out: str) -> None:
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     base = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    out = sys.argv[3] if len(sys.argv) > 3 else "/root/repo/.sfdata/sf1"
+    out = sys.argv[3] if len(sys.argv) > 3 else str(REPO / ".sfdata" / "sf1")
     generate(n, base, out)
 
 

@@ -31,8 +31,10 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 # query -> (bound_mb, measured_mb) at sf0.1. measured_mb is the r15
 # session measurement of this tool itself (2026-08-18, sf0.1,

@@ -21,12 +21,13 @@ import hashlib
 import sys
 import time
 import traceback
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-REPO = "/root/repo"
-sys.path.insert(0, REPO)
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"

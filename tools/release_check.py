@@ -19,13 +19,17 @@ import re
 import subprocess
 import sys
 import time
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
 
 FAST = "--fast" in sys.argv
 
+# run with cwd = the checkout, which `python -c` puts on sys.path
 DRIVER_SIM = """
 from pyspark.sql import SparkSession
 spark = SparkSession.builder.master("local[8]").getOrCreate()
-import sys; sys.path.insert(0, "/root/repo"); import importlib
+import importlib
 m = importlib.import_module("__spark_entry__")
 rows = len(m.entry(spark).collect())
 print(f"DRIVER_SIM rows={rows} queries={len(m.queries())} oracles={len(m.oracle_sql())}")
@@ -73,7 +77,7 @@ def main() -> int:
     for name, cmd in LEGS:
         t0 = time.time()
         proc = subprocess.run(
-            cmd, cwd="/root/repo", capture_output=True, text=True, timeout=3600
+            cmd, cwd=REPO, capture_output=True, text=True, timeout=3600
         )
         wall = time.time() - t0
         full = proc.stdout + proc.stderr

@@ -30,9 +30,8 @@ from __future__ import annotations
 
 import sys
 
+# also puts the checkout on sys.path
 from stage_metrics import SHUFFLE_MD, write_section
-
-sys.path.insert(0, "/root/repo")
 
 N_LEFT = 2_000_000
 N_KEYS = 1_000

@@ -35,7 +35,8 @@ import json
 import subprocess
 import sys
 
-from stage_metrics import SHUFFLE_MD, write_section
+# also puts the checkout on sys.path
+from stage_metrics import REPO, SHUFFLE_MD, write_section
 
 SHAPES = ("sort8x", "kn_fullfit")
 
@@ -120,7 +121,7 @@ def main() -> None:
             [sys.executable, __file__, "worker", shape],
             capture_output=True,
             text=True,
-            cwd="/root/repo",
+            cwd=REPO,
             timeout=1800,
         )
         rec = None
@@ -166,7 +167,6 @@ def main() -> None:
 
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "worker":
-        sys.path.insert(0, "/root/repo")
         worker(sys.argv[2])
     else:
         main()

@@ -28,9 +28,10 @@ import re
 import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
-SHUFFLE_MD = Path(__file__).resolve().parents[1] / "SHUFFLE.md"
+SHUFFLE_MD = REPO / "SHUFFLE.md"
 
 HEADLINE = [
     "q_agg_pricing_summary",
@@ -134,7 +135,7 @@ def main() -> None:
     rows = measure(sf_dir)
     # sf1 shuffle-growth comparison (r13): shuffle VOLUME growth vs
     # data growth is the scale question local wall time can't answer
-    sf1_dir = "/root/repo/.sfdata/sf1"
+    sf1_dir = str(REPO / ".sfdata" / "sf1")
     sf1_rows: dict[str, dict] = {}
     if sf_dir != sf1_dir and os.path.isdir(sf1_dir):
         sf1_rows = dict(measure(sf1_dir))

@@ -595,7 +595,7 @@ def repetition_signals(
         *[f"top_{n}gram_chars long" for n in top_ns],
         *[f"dup_{n}gram_chars long" for n in dup_ns],
     ]
-    schema = f"{id_col} {id_type}, " + ", ".join(ints)
+    schema = f"{sql_ident(id_col)} {id_type}, " + ", ".join(ints)
     tok_re = _re.compile(r"[^a-z0-9]+")
     ns = tuple(dict.fromkeys(tuple(top_ns) + tuple(dup_ns)))
 
@@ -653,15 +653,17 @@ def repetition_signals(
         for pdf in batches:
             out = [
                 (i, *_one(s))
-                for i, s in zip(pdf[id_col], pdf[text_col])
+                for i, s in zip(pdf["__id"], pdf["__text"])
             ]
             yield pd.DataFrame(
                 out, columns=[id_col] + [c.split(" ")[0] for c in ints]
             )
 
-    signals = ensure_parallelism(df).select(id_col, text_col).mapInPandas(
-        gen, schema=schema
-    )
+    # fixed input names: mapInPandas re-resolves its input columns by
+    # unquoted name, which a backtick in a user's name cannot survive
+    signals = ensure_parallelism(df).select(
+        F.col(sql_ident(id_col)).alias("__id"), F.col(sql_ident(text_col)).alias("__text")
+    ).mapInPandas(gen, schema=schema)
 
     def _frac(num: str, den: str) -> Column:
         return F.when(

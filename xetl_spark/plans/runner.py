@@ -300,6 +300,28 @@ def _prepare(
     return plan
 
 
+def _previous_output(
+    deps: dict[int, set[int]], outputs: dict[int, DataFrame | None], i: int
+) -> DataFrame | None:
+    """``ctx.previous`` of stage ``i``: the output of its latest-position
+    dependency that has one. A dependency without output (skip:true, or
+    a task returning None) is transparent: its own dependencies are
+    searched instead."""
+    import heapq
+
+    heap = [-j for j in deps[i]]
+    heapq.heapify(heap)
+    seen = set(deps[i])
+    while heap:
+        j = -heapq.heappop(heap)
+        if outputs[j] is not None:
+            return outputs[j]
+        for k in deps[j] - seen:
+            seen.add(k)
+            heapq.heappush(heap, -k)
+    return None
+
+
 def stage_dependencies(
     job: Job, plan: list[tuple[Command, Any, Any, dict[str, EnvValue]]]
 ) -> dict[int, set[int]]:
@@ -395,7 +417,6 @@ def run_job(
     searched. Under the implicit chain that is the predecessor's output.
     """
     import contextvars
-    import heapq
     from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 
     from pyspark.util import inheritable_thread_target
@@ -406,19 +427,6 @@ def run_job(
     deps = stage_dependencies(job, plan)
     results: dict[int, StageResult] = {}
     outputs: dict[str, DataFrame] = {}
-
-    def previous_of(i: int) -> DataFrame | None:
-        heap = [-j for j in deps[i]]
-        heapq.heapify(heap)
-        seen = set(deps[i])
-        while heap:
-            j = -heapq.heappop(heap)
-            if results[j].output is not None:
-                return results[j].output
-            for k in deps[j] - seen:
-                seen.add(k)
-                heapq.heappush(heap, -k)
-        return None
 
     def run_one(
         i: int, previous: DataFrame | None, outs: dict[str, DataFrame]
@@ -462,7 +470,9 @@ def run_job(
                     target = inheritable_thread_target(spark)(run_one)
                     fut = pool.submit(
                         contextvars.copy_context().run,
-                        target, i, previous_of(i), dict(outputs),
+                        target, i,
+                        _previous_output(deps, {j: r.output for j, r in results.items()}, i),
+                        dict(outputs),
                     )
                     running[fut] = i
                 if not running:
@@ -672,24 +682,34 @@ def explain_job(
 ) -> str:
     """Dry-run as EXPLAIN: the fully-resolved manifest plus each
     stage's logical/physical plan (reference dry-run parity,
-    job.py:160-171 + task.py:312-317). A SINK_TASKS stage shows its
-    input's plan and writes nothing; every other task body is called to
+    job.py:160-171 + task.py:312-317). A skip:true stage is listed but
+    not called, and each stage explains the same ``previous`` input
+    run_job would give it. A SINK_TASKS stage shows its input's plan
+    and writes nothing; every other task body is called to
     build its plan, so one that runs an action while planning (a model
     fit, a gate count, a state-store update) still runs it."""
     reg = (registry or BUILTINS).copy()
     if job.tasks:
         reg.discover(job.tasks)
-    lines = [f"job: {job.name}", f"data: {job.data}"]
-    outputs: dict[str, DataFrame] = {}
-    previous: DataFrame | None = None
+    plan = []
     for cmd in job.commands:
         spec, fn = reg.get(cmd.task)
-        env = spec.apply_defaults(cmd.env)
+        plan.append((cmd, spec, fn, spec.apply_defaults(cmd.env)))
+    deps = stage_dependencies(job, plan)
+    lines = [f"job: {job.name}", f"data: {job.data}"]
+    outputs: dict[str, DataFrame] = {}
+    pos_outputs: dict[int, DataFrame | None] = {}
+    for i, (cmd, spec, fn, env) in enumerate(plan):
+        pos_outputs[i] = None
         lines.append(f"\ncommand: {cmd.name or cmd.task} (task={spec.name}, skip={cmd.skip})")
         for k, v in env.items():
             lines.append(f"  {k} = {v!r}")
+        if cmd.skip:
+            # as in run_job: not called, and transparent to `previous`
+            continue
         ctx = StageContext(
-            spark=spark, job=job, command=cmd, env=env, outputs=outputs, previous=previous
+            spark=spark, job=job, command=cmd, env=env, outputs=outputs,
+            previous=_previous_output(deps, pos_outputs, i),
         )
         try:
             out = ctx.input_df() if spec.name in SINK_TASKS else fn(ctx)
@@ -722,5 +742,5 @@ def explain_job(
                 pass  # Connect sessions (no _jdf) skip lineage
             if cmd.name:
                 outputs[cmd.name] = out
-            previous = out
+            pos_outputs[i] = out
     return "\n".join(lines)

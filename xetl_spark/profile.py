@@ -67,6 +67,22 @@ def profile(spark, action: Callable[[], Any]) -> Profile:
     return Profile(result, wall_s, _completed_stages(spark, jsc, tag))
 
 
+def crossing_ms(spark) -> int:
+    """Best-of-3 wall (ms) of a fixed 32-task identity ``mapInPandas``
+    round trip, after one priming run (worker and Arrow channel init):
+    the JVM↔Python crossing regime. It is bimodal on a shared host
+    (~100 ms fast, ~400 ms+ slow), and mapInPandas-heavy timings are
+    comparable only within one regime."""
+    probe = spark.range(0, 256).repartition(32).mapInPandas(lambda it: it, schema="id long")
+    probe.count()
+    best = float("inf")
+    for _ in range(3):
+        t0 = time.perf_counter()
+        probe.count()
+        best = min(best, time.perf_counter() - t0)
+    return round(best * 1000)
+
+
 def _completed_stages(spark, jsc, tag: str) -> list[StageMetrics]:
     store, tracker, jvm = jsc.statusStore(), jsc.statusTracker(), spark._jvm
     stage_ids = set()
