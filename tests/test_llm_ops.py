@@ -1059,6 +1059,57 @@ def test_opq_rotation_beats_plain_pq_on_correlated_dims(spark):
     assert r_opq - r_pq >= 0.05, (r_pq, r_opq)
 
 
+def test_opq_fit_rotation_orthonormal_on_degenerate_samples(spark):
+    """The eigenvalue-allocation start must not break on samples whose
+    covariance is rank-deficient (1 or 3 rows at d=16) or zero
+    (identical rows): the rotation stays finite and orthonormal, and
+    no log of a zero or negative eigenvalue is taken on the way."""
+    import numpy as np
+
+    from xetl_spark.operators.pq import opq_fit
+
+    rng = np.random.default_rng(3)
+    d = 16
+    one = rng.normal(size=(1, d))
+    few = rng.normal(size=(3, d))
+    same = np.tile(rng.normal(size=d), (40, 1))
+    for x in (one, few, same):
+        rows = [(i, [float(v) for v in x[i]]) for i in range(len(x))]
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        with np.errstate(divide="raise", invalid="raise"):
+            rot, books = opq_fit(emb, "embedding", m=4, k=8, iters=2)
+        r = np.asarray(rot)
+        assert r.shape == (d, d)
+        assert np.isfinite(r).all()
+        assert np.allclose(r @ r.T, np.eye(d), atol=1e-8)
+        assert np.isfinite(np.asarray(books)).all()
+
+
+def test_opq_eigenvalue_allocation_ignores_the_data_scale():
+    """The starting rotation groups the same eigenvectors whatever the
+    embeddings' unit, and the m largest-variance directions seed m
+    different subspaces. One dominant direction over a flat tail is
+    the case that separates the rules: only one eigenvalue exceeds the
+    geometric mean, and at 0.01x every eigenvalue is below 1."""
+    import numpy as np
+
+    from xetl_spark.operators.pq import _eigenvalue_allocation
+
+    rng = np.random.default_rng(11)
+    d, m = 16, 4
+    q_mix, _ = np.linalg.qr(rng.normal(size=(d, d)))
+    scales = np.r_[50.0, np.linspace(1.0, 0.6, d - 1)]
+    x = (rng.normal(size=(500, d)) * scales) @ q_mix
+    r1 = _eigenvalue_allocation(x, m)
+    for c in (0.01, 100.0):
+        rc = _eigenvalue_allocation(x * c, m)
+        # same columns, up to each eigenvector's sign
+        assert np.allclose(np.abs(r1.T @ rc), np.eye(d), atol=1e-8), c
+    var = ((x - x.mean(0)) @ r1).var(0)
+    top = np.argsort(var)[::-1][:m]
+    assert sorted(int(col) // (d // m) for col in top) == list(range(m))
+
+
 def test_pq_encode_shapes_and_code_range(spark, sf_dir):
     from xetl_spark.operators.pq import pq_encode, pq_fit
 

@@ -100,6 +100,51 @@ def _pq_reconstruct(
     return y
 
 
+def _eigenvalue_allocation(x: np.ndarray, m: int) -> np.ndarray:
+    """Ge et al.'s parametric OPQ rotation (CVPR 2013, §4): the
+    eigenvectors of the sample covariance, ordered subspace by
+    subspace. Eigenvalues are taken largest first; each goes to the
+    subspace, among those not yet full, with the smallest product of
+    the eigenvalues already in it. For Gaussian data PQ's distortion
+    bound grows with each subspace's eigenvalue product (its
+    covariance determinant), and is least when the products are
+    balanced.
+
+    Two choices the greedy rule leaves open, both made so that the
+    grouping does not depend on the embeddings' unit: an empty
+    subspace counts as the smallest, so the m largest eigenvalues seed
+    distinct subspaces; and products are compared on eigenvalues
+    divided by their geometric mean. Scaling the data by c scales a
+    product of j raw eigenvalues by c**j, so raw products would order
+    subspaces holding different counts by the unit; and with an empty
+    subspace counted as product 1, embeddings whose eigenvalues are
+    all below 1 would pile the largest ones into subspace 0.
+
+    Safe on degenerate samples: the population covariance (divide by
+    n) is defined for one row, and eigenvalues are floored before the
+    logs, so rank-deficient and constant samples still give an
+    orthonormal R."""
+    n, d = x.shape
+    dsub = d // m
+    xc = x - x.mean(0)
+    evals, evecs = np.linalg.eigh(xc.T @ xc / n)
+    order = np.argsort(evals)[::-1]
+    fin = np.finfo(np.float64)
+    floor = max(evals.max() * fin.eps, fin.tiny)
+    logs = np.log(np.maximum(evals[order], floor))
+    logs -= logs.mean()
+    slots: list[list[int]] = [[] for _ in range(m)]
+    log_prod = np.zeros(m)
+    for j, lv in zip(order, logs):
+        i = min(
+            (i for i in range(m) if len(slots[i]) < dsub),
+            key=lambda i: (len(slots[i]) > 0, log_prod[i]),
+        )
+        slots[i].append(int(j))
+        log_prod[i] += lv
+    return evecs[:, [j for s in slots for j in s]]
+
+
 def opq_fit(
     corpus: DataFrame,
     vec_col: str,
@@ -115,11 +160,17 @@ def opq_fit(
     codebooks) — apply ``x @ R`` before encoding; L2 distances are
     rotation-invariant, so exact reranks still use original vectors.
 
-    The non-parametric alternation, all driver-side on the bounded
-    sample (d x d SVD on 64-dim embeddings is microseconds):
-      1. rotate the sample, 2. fit per-subspace k-means, 3. decode the
-      codes back to vectors Y, 4. solve the orthogonal Procrustes
-      problem min_R ||X R - Y||_F (SVD of X^T Y), repeat.
+    The start is Ge et al.'s parametric solution, eigenvalue
+    allocation (§4, ``_eigenvalue_allocation``): R's columns are the
+    sample covariance's eigenvectors, grouped so that each subspace
+    gets a balanced product of eigenvalues. From there the
+    non-parametric alternation runs ``iters`` times (at least once),
+    all driver-side on the bounded sample (d x d SVD on 64-dim
+    embeddings is microseconds):
+      1. rotate the sample by the current R, 2. fit per-subspace
+      k-means, 3. decode the codes back to vectors Y, 4. solve the
+      orthogonal Procrustes problem min_R ||X R - Y||_F (SVD of X^T Y),
+      repeat.
     PQ's quantization error depends on how variance lands across
     subspaces; on embeddings with correlated/unevenly-scaled
     dimensions the learned R recovers most of the accuracy a plain
@@ -130,7 +181,7 @@ def opq_fit(
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
     dsub = d // m
-    r = np.eye(d)
+    r = _eigenvalue_allocation(x, m)
     for it in range(max(1, int(iters))):
         xr = x @ r
         books = [
