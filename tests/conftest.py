@@ -1,5 +1,9 @@
+from pathlib import Path
+
 import pytest
 
+# the checkout these tests belong to, wherever it lives
+REPO = Path(__file__).resolve().parents[1]
 SF_DIR = "/root/testdata/sf0.001"
 
 

@@ -17,6 +17,8 @@ from xetl_spark.plans.alerts import (
     load_rules,
 )
 
+from conftest import REPO
+
 REPORT = {
     "job": "j",
     "total_wall_s": 12.5,
@@ -183,7 +185,7 @@ def test_expect_task_gates_and_reports(spark, tmp_path):
 
 
 def test_shipped_alerts_example_parses():
-    rules = load_rules("/root/repo/examples/alerts.yml")
+    rules = load_rules(REPO / "examples" / "alerts.yml")
     assert {r.name for r in rules} == {
         "stage-over-a-minute", "stage-retried",
         "empty-materialized-output", "any-stage-failed",

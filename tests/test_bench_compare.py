@@ -10,6 +10,8 @@ import json
 import subprocess
 import sys
 
+from conftest import REPO
+
 FULL = {
     "metric": "headline_query_wall_seconds",
     "value": 9.5,
@@ -36,7 +38,7 @@ def _pack(d: dict) -> str:
 def _run(old_path, new_path):
     p = subprocess.run(
         [sys.executable, "tools/bench_compare.py", str(old_path), str(new_path)],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     return p.returncode, p.stdout + p.stderr
 

@@ -5,12 +5,12 @@ task-level golden tests."""
 import subprocess
 import sys
 import textwrap
-from pathlib import Path
 
 import pytest
 
+from conftest import REPO
+
 SF = "/root/testdata/sf0.001"
-REPO = Path(__file__).resolve().parents[1]
 
 
 def test_cli_runs_manifest(tmp_path):
@@ -35,7 +35,7 @@ def test_cli_runs_manifest(tmp_path):
         [sys.executable, "-m", "xetl_spark", str(manifest)],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
@@ -73,7 +73,7 @@ def test_cli_missing_manifest_exit_1():
         [sys.executable, "-m", "xetl_spark", "/no/such.yml"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=60,
     )
     assert proc.returncode == 1
@@ -95,7 +95,7 @@ def test_cli_failing_stage_exit_code(tmp_path):
         [sys.executable, "-m", "xetl_spark", str(manifest)],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=300,
     )
     assert proc.returncode == 2
@@ -156,7 +156,7 @@ def test_typoed_run_name_deferred_to_run_time(spark, tmp_path):
     import stat
 
     from xetl_spark.plans.registry import TaskRegistry
-    from xetl_spark.plans.runner import StageContext
+    from xetl_spark.plans.runner import StageContext, drive_task
 
     taskdir = tmp_path / "tasks" / "typo"
     taskdir.mkdir(parents=True)
@@ -170,7 +170,7 @@ def test_typoed_run_name_deferred_to_run_time(spark, tmp_path):
     _, fn = reg.get("typo-task")
     ctx = StageContext(spark=spark, job=None, command=None, env={})
     with pytest.raises(ValueError, match="misspelled task name"):
-        fn(ctx)
+        drive_task(fn, ctx)
 
     # the same shape resolves fine once the program exists at run time
     latedir = tmp_path / "tasks" / "late"
@@ -182,7 +182,7 @@ def test_typoed_run_name_deferred_to_run_time(spark, tmp_path):
     script.write_text("#!/bin/sh\necho made-late\n")
     script.chmod(script.stat().st_mode | stat.S_IEXEC)
     _, late_fn = reg.get("late-task")
-    late_fn(ctx)  # no raise: re-resolved at execution
+    drive_task(late_fn, ctx)  # no raise: re-resolved at execution
 
     # a real program with args still discovers as a subprocess task
     okdir = tmp_path / "tasks" / "shellok"
@@ -292,7 +292,7 @@ def test_cli_list_tasks(tmp_path):
     manifest.write_text("name: lt\ncommands: []\n")
     proc = subprocess.run(
         [sys.executable, "-m", "xetl_spark", str(manifest), "--list-tasks"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
+        capture_output=True, text=True, cwd=REPO, timeout=120,
     )
     assert proc.returncode == 0
     for expected in ("read_parquet", "sql", "write_parquet", "dedup", "subjob"):

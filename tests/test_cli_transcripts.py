@@ -20,6 +20,8 @@ import subprocess
 import sys
 import textwrap
 
+from conftest import REPO
+
 _NOISE = re.compile(
     r"WARNING: Using incubator|Setting default log level|"
     r"Using Spark's default log4j|To adjust logging level|"
@@ -53,7 +55,7 @@ def _run_cli(manifest: str) -> subprocess.CompletedProcess:
         [sys.executable, "-m", "xetl_spark", manifest],
         stdout=subprocess.PIPE,
         stderr=subprocess.STDOUT,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=240,
     )
 
@@ -83,7 +85,7 @@ def test_dryrun_golden_transcript(tmp_path):
         [sys.executable, "-m", "xetl_spark", str(manifest), "--dryrun"],
         stdout=subprocess.PIPE,
         stderr=subprocess.STDOUT,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=240,
     )
     assert res.returncode == 0, res.stdout.decode()
@@ -141,7 +143,7 @@ def test_failure_golden_transcript(tmp_path):
         [sys.executable, "-m", "xetl_spark", str(manifest), "-l", "2"],
         stdout=subprocess.PIPE,
         stderr=subprocess.STDOUT,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=240,
     )
     out = res.stdout.decode()
@@ -211,7 +213,7 @@ def test_gaudy_success_golden_transcript(tmp_path):
         [sys.executable, "-m", "xetl_spark", str(manifest), "-l", "gaudy"],
         stdout=subprocess.PIPE,
         stderr=subprocess.STDOUT,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=240,
     )
     out = res.stdout.decode()

@@ -14,6 +14,8 @@ from hypothesis import strategies as st
 from xetl_spark.operators import docx as docmod
 from xetl_spark.operators import pdfdoc as P
 
+from conftest import REPO
+
 # ---------------------------------------------------------------------------
 # PDF round-trips
 
@@ -623,7 +625,7 @@ def test_document_ingest_example_job(spark, tmp_path):
     (docs / "broken.pdf").write_bytes(b"%PDF-1.4 truncated garbage")
 
     manifest = tmp_path / "job.yml"
-    text = open("/root/repo/examples/document_ingest.yml").read()
+    text = open(REPO / "examples" / "document_ingest.yml").read()
     text = text.replace("DOCS_DIR: ./data/docs", f"DOCS_DIR: {docs}")
     text = text.replace(
         "OUT_DIR: /tmp/xetl_document_ingest_out", f"OUT_DIR: {tmp_path}/out"

@@ -11,7 +11,9 @@ import sys
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+from conftest import REPO  # noqa: E402
+
+sys.path.insert(0, str(REPO / "tools"))
 
 BASE = "/root/testdata/sf0.001"
 

@@ -5,7 +5,9 @@ import sys
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo/tools")
+from conftest import REPO  # noqa: E402
+
+sys.path.insert(0, str(REPO / "tools"))
 from oracle_harness import canonical_hash  # noqa: E402
 
 

@@ -19,6 +19,8 @@ import pytest
 
 from xetl_spark.operators import imaging as im
 
+from conftest import REPO
+
 rng = np.random.default_rng(1234)
 
 
@@ -406,7 +408,7 @@ def test_multimodal_prep_example_manifest(spark, tmp_path):
     (tmp_path / "audio" / "clip.wav").write_bytes(aud.wav_encode(tone, 1000))
 
     manifest = tmp_path / "job.yml"
-    text = open("/root/repo/examples/multimodal_prep.yml").read()
+    text = open(REPO / "examples" / "multimodal_prep.yml").read()
     text = text.replace("data: ./data", f"data: {tmp_path}")
     text = text.replace("IMAGES: ./data/images", f"IMAGES: {tmp_path}/images")
     text = text.replace("AUDIO: ./data/audio", f"AUDIO: {tmp_path}/audio")

@@ -7,7 +7,7 @@ import threading
 
 from pyspark.sql import functions as F
 
-from xetl_spark.profile import profile
+from xetl_spark.profile import crossing_ms, profile
 
 
 def _grouped_write(spark, n: int, keys: int) -> None:
@@ -75,3 +75,11 @@ def test_concurrent_profiles_see_only_their_own_stages(spark):
     assert ids["a"] and ids["b"] and not ids["a"] & ids["b"]
     for k in shapes:
         assert _shuffle_write(got[k]) == 2 * solo[k], k
+
+
+def test_crossing_probe_runs_in_one_wave(spark):
+    """The crossing probe runs no stage wider than the core count, so
+    it times the JVM<->Python crossing, not task waves."""
+    p = profile(spark, lambda: crossing_ms(spark))
+    assert p.result > 0 and p.stages
+    assert max(s.tasks for s in p.stages) <= spark.sparkContext.defaultParallelism

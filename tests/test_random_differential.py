@@ -11,7 +11,9 @@ import numpy as np
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+from conftest import REPO  # noqa: E402
+
+sys.path.insert(0, str(REPO / "tools"))
 from oracle_harness import canonical_hash  # noqa: E402
 
 import duckdb  # noqa: E402

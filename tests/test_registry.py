@@ -14,11 +14,9 @@ import subprocess
 import sys
 from fnmatch import fnmatch
 from itertools import groupby
-from pathlib import Path
 
 import xetl_spark.queries as Q
-
-REPO = Path(__file__).resolve().parents[1]
+from conftest import REPO
 
 _IMPORT_PROBE = """
 import json, os, sys

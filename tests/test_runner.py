@@ -18,6 +18,8 @@ from xetl_spark.plans.models import Job, UnknownTaskError, ValidationError
 from xetl_spark.plans.registry import BUILTINS, TaskRegistry, task
 from xetl_spark.plans.runner import TaskFailure, explain_job, run_job
 
+from conftest import REPO
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -308,7 +310,7 @@ def test_example_corpus_curation_manifest(spark, tmp_path, monkeypatch):
     every stage succeeds, the signal/flag columns flow through the SQL
     gate, and the partitioned output survives with rows."""
     monkeypatch.setenv("OUT_DIR", str(tmp_path / "cur_out"))
-    job = Job.from_file("/root/repo/examples/corpus_curation.yml")
+    job = Job.from_file(REPO / "examples" / "corpus_curation.yml")
     results = run_job(spark, job)
     assert all(r.status == "success" for r in results)
     out = spark.read.parquet(str(tmp_path / "cur_out"))
@@ -333,7 +335,7 @@ def test_example_llm_prep_manifest(spark, tmp_path, monkeypatch):
     """The shipped example manifest runs end-to-end and its partitioned
     output matches the oracle-computable dedup semantics."""
     monkeypatch.setenv("OUT_DIR", str(tmp_path / "prep_out"))
-    job = Job.from_file("/root/repo/examples/llm_prep.yml")
+    job = Job.from_file(REPO / "examples" / "llm_prep.yml")
     results = run_job(spark, job)
     assert all(r.status == "success" for r in results)
     out = spark.read.parquet(str(tmp_path / "prep_out"))
@@ -838,7 +840,7 @@ def test_example_parallel_report_manifest(spark, tmp_path, monkeypatch):
     """The shipped parallel-DAG example runs under the concurrent
     scheduler and produces the expected star-join revenue rows."""
     monkeypatch.setenv("OUT_DIR", str(tmp_path / "par_out"))
-    job = Job.from_file("/root/repo/examples/parallel_report.yml")
+    job = Job.from_file(REPO / "examples" / "parallel_report.yml")
     results = run_job(spark, job, max_workers=4)
     assert [r.status for r in results] == ["success"] * 5
     out = spark.read.parquet(str(tmp_path / "par_out"))
@@ -1029,7 +1031,7 @@ def test_example_llm_prep_manifest(spark, monkeypatch, tmp_path):
     → dedup → near-dedup → mix → pack → chunk → summary → sink) runs
     green end to end on sf0.001 and its sink round-trips."""
     monkeypatch.setenv("OUT_DIR", str(tmp_path / "llm_out"))
-    job = Job.from_file("/root/repo/examples/llm_prep.yml")
+    job = Job.from_file(REPO / "examples" / "llm_prep.yml")
     results = run_job(spark, job)
     assert all(r.status == "success" for r in results), [
         (r.command.name, r.status) for r in results
@@ -1068,7 +1070,7 @@ def test_example_timeseries_watch_manifest(spark, monkeypatch, tmp_path):
     anomaly → expect gate → filter → avro sink) runs green and its
     Avro archive reads back through xetl_avro."""
     monkeypatch.setenv("OUT_DIR", str(tmp_path / "ts_out"))
-    job = Job.from_file("/root/repo/examples/timeseries_watch.yml")
+    job = Job.from_file(REPO / "examples" / "timeseries_watch.yml")
     results = run_job(spark, job)
     assert all(r.status == "success" for r in results), [
         (r.command.name, r.status) for r in results
@@ -1382,7 +1384,7 @@ def test_example_incremental_ingest_two_runs(spark, tmp_path, monkeypatch):
     and writes nothing new."""
     monkeypatch.setenv("STORE_DIR", str(tmp_path / "stores"))
     monkeypatch.setenv("OUT_DIR", str(tmp_path / "out1"))
-    job = Job.from_file("/root/repo/examples/incremental_ingest.yml")
+    job = Job.from_file(REPO / "examples" / "incremental_ingest.yml")
     results = run_job(spark, job)
     assert all(r.status == "success" for r in results)
     n1 = spark.read.parquet(str(tmp_path / "out1")).count()
@@ -1390,7 +1392,7 @@ def test_example_incremental_ingest_two_runs(spark, tmp_path, monkeypatch):
     assert 0 < n1 <= n_in
 
     monkeypatch.setenv("OUT_DIR", str(tmp_path / "out2"))
-    job2 = Job.from_file("/root/repo/examples/incremental_ingest.yml")
+    job2 = Job.from_file(REPO / "examples" / "incremental_ingest.yml")
     results2 = run_job(spark, job2)
     assert all(r.status == "success" for r in results2)
     assert spark.read.parquet(str(tmp_path / "out2")).count() == 0
@@ -1404,6 +1406,7 @@ def test_incremental_dedup_task_minhash_mode(spark, tmp_path):
     """MODE=minhash drops near-duplicates of the persisted store and
     of lower-id in-batch rows; unknown MODE raises."""
     from xetl_spark.plans.registry import BUILTINS
+    from xetl_spark.plans.runner import drive_task
 
     _spec, fn = BUILTINS.get("incremental_dedup")
     store = str(tmp_path / "sigs")
@@ -1426,16 +1429,16 @@ def test_incremental_dedup_task_minhash_mode(spark, tmp_path):
 
         return _Ctx()
 
-    out1 = fn(ctx([(1, base), (2, base + " extra"), (3, "totally different words about spark pipelines and parquet files")]))
+    out1, _ = drive_task(fn, ctx([(1, base), (2, base + " extra"), (3, "totally different words about spark pipelines and parquet files")]))
     assert sorted(r.doc_id for r in out1.collect()) == [1, 3]
     # second batch: near-dup of stored doc 1 + genuinely new row
-    out2 = fn(ctx([(10, base + " tail"), (11, "brand new content with many unique tokens nobody has seen before")]))
+    out2, _ = drive_task(fn, ctx([(10, base + " tail"), (11, "brand new content with many unique tokens nobody has seen before")]))
     assert sorted(r.doc_id for r in out2.collect()) == [11]
 
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="MODE"):
-        fn(ctx([(99, "x y z")], mode="bogus"))
+        drive_task(fn, ctx([(99, "x y z")], mode="bogus"))
 
 
 def test_semantic_dedup_task_incremental_store(spark, tmp_path):
@@ -1446,6 +1449,7 @@ def test_semantic_dedup_task_incremental_store(spark, tmp_path):
 
     from xetl_spark.plans.registry import BUILTINS
     from xetl_spark.operators.similarity import semdedup_load_store
+    from xetl_spark.plans.runner import drive_task
 
     _spec, fn = BUILTINS.get("semantic_dedup")
     rng = np.random.default_rng(3)
@@ -1473,9 +1477,9 @@ def test_semantic_dedup_task_incremental_store(spark, tmp_path):
 
         return _Ctx()
 
-    out1 = fn(ctx([(1, jit(v1)), (2, jit(v1)), (3, jit(v2))]))
+    out1, _ = drive_task(fn, ctx([(1, jit(v1)), (2, jit(v1)), (3, jit(v2))]))
     assert sorted(r.doc_id for r in out1.collect()) == [1, 3]
-    out2 = fn(ctx([(10, jit(v1)), (20, jit(v3))]))
+    out2, _ = drive_task(fn, ctx([(10, jit(v1)), (20, jit(v3))]))
     assert sorted(r.doc_id for r in out2.collect()) == [20]
     st, ctr = semdedup_load_store(spark, store)
     assert sorted(r.id for r in st.collect()) == [1, 3, 20]
@@ -1759,6 +1763,7 @@ def test_vacuum_run_history_retention(spark, tmp_path):
     assert not os.path.isdir(path)
     # builtin task wrapper returns the removed count as a row
     from xetl_spark.plans.registry import BUILTINS
+    from xetl_spark.plans.runner import drive_task
 
     for i in range(3):
         write_run_report(spark, _report(f"k{i}", 0), path)
@@ -1772,7 +1777,7 @@ def test_vacuum_run_history_retention(spark, tmp_path):
     c.spark = spark
     c.env = {"PATH": path, "KEEP_LAST_RUNS": "1", "MAX_AGE_DAYS": ""}
     c.metrics = {}
-    (row,) = fn(c).collect()
+    (row,) = drive_task(fn, c)[0].collect()
     assert row.rows_removed == 2 and c.metrics["rows"] == 2
     assert spark.read.parquet(path).count() == 1
     # non-local URIs error loudly instead of silently no-opping (r14):

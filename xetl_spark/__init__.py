@@ -1,7 +1,7 @@
 """xetl_spark — a PySpark-native analytics/pipeline engine.
 
 Re-implements the capability surface of the reference orchestrator
-(sebmartin/xETL, surveyed in /root/repo/SURVEY.md) Spark-first:
+(sebmartin/xETL, surveyed in the repository's SURVEY.md) Spark-first:
 
 - ``xetl_spark.plans``   — YAML Job/Command/Task pipeline models with the
   reference's env-inheritance + placeholder-resolution semantics

@@ -122,7 +122,7 @@ def main(argv: list[str] | None = None) -> int:
         ManifestError,
         ValidationError,
     )
-    from xetl_spark.plans.runner import TaskFailure, _filter_commands, explain_job, run_job
+    from xetl_spark.plans.runner import TaskFailure, explain_job, run_job
     from xetl_spark.session import get_session
 
     try:
@@ -131,12 +131,13 @@ def main(argv: list[str] | None = None) -> int:
         print(f"error: invalid manifest: {exc}", file=sys.stderr)
         return 1
 
-    if args.list_tasks:
+    if args.list_tasks or args.run_task_tests:
         from xetl_spark.plans.registry import BUILTINS
 
         reg = BUILTINS.copy()
         if job.tasks:
             reg.discover(job.tasks)
+    if args.list_tasks:
         for name in reg.names():
             spec, _ = reg.get(name)
             print(f"{name}: {spec.description or ''}")
@@ -145,12 +146,8 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_session(f"xetl:{job.name}")
 
     if args.run_task_tests:
-        from xetl_spark.plans.registry import BUILTINS
         from xetl_spark.plans.runner import run_task_tests
 
-        reg = BUILTINS.copy()
-        if job.tasks:
-            reg.discover(job.tasks)
         outcomes = run_task_tests(spark, registry=reg)
         failed = False
         for name, cases in outcomes.items():
@@ -159,11 +156,10 @@ def main(argv: list[str] | None = None) -> int:
                 failed = failed or not ok
         return 1 if failed else 0
 
-    if args.dryrun:
-        selected = job.model_copy(update={"commands": _filter_commands(job, args.commands)})
-        print(explain_job(spark, selected))
-        return 0
     try:
+        if args.dryrun:
+            print(explain_job(spark, job, commands=args.commands))
+            return 0
         results = run_job(
             spark,
             job,

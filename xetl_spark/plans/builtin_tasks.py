@@ -96,6 +96,7 @@ def read_text(ctx: StageContext):
 def download(ctx: StageContext):
     from xetl_spark.sources.url import ingest_url
 
+    yield None
     return ingest_url(ctx.spark, str(ctx.env["URL"]), fmt=str(ctx.env["FORMAT"]))
 
 
@@ -227,6 +228,7 @@ def repartition_stage(ctx: StageContext):
 
 def _write(ctx: StageContext, fmt: str):
     df = ctx.input_df()
+    yield df
     part = ctx.env.get("PARTITION_BY")
     # ride the write action with an Observation: row count lands in the
     # run report for free (no second scan / no count() action)
@@ -301,6 +303,7 @@ def write_avro_task(ctx: StageContext):
     from xetl_spark.sources.avro import write_avro
 
     df = ctx.input_df()
+    yield df
     write_avro(df, str(ctx.env["PATH"]), codec=str(ctx.env["CODEC"]))
     return df
 
@@ -753,6 +756,7 @@ def subjob(ctx: StageContext):
     from xetl_spark.plans.runner import run_job
 
     inner = Job.from_file(str(ctx.env["MANIFEST"]))
+    yield None
     results = run_job(ctx.spark, inner)
     for r in reversed(results):
         if r.output is not None:
@@ -773,6 +777,7 @@ def subjob(ctx: StageContext):
 )
 def save_table(ctx: StageContext):
     df = ctx.input_df()
+    yield df
     writer = df.write.mode(str(ctx.env["MODE"]))
     buckets, by = ctx.env.get("BUCKETS"), ctx.env.get("BUCKET_BY")
     if buckets and by:
@@ -818,6 +823,23 @@ def near_dedup(ctx: StageContext):
     return df.join(keep, on=id_col, how="left_semi")
 
 
+def _swap_store(store_s: str, save, fresh):
+    """Commit a dedup STORE: ``save(tmp)`` writes it to a sibling temp
+    dir, since ``fresh`` and the new store read the current files;
+    ``fresh`` is then eagerly localCheckpoint-ed, because persist()
+    keeps lineage that an eviction would recompute from deleted files."""
+    import os
+    import shutil
+
+    tmp = store_s.rstrip("/") + ".tmp"
+    save(tmp)
+    fresh = fresh.localCheckpoint(eager=True)
+    if os.path.isdir(store_s):
+        shutil.rmtree(store_s)
+    os.replace(tmp, store_s)
+    return fresh
+
+
 @task(
     "incremental_dedup",
     "Cross-run ingestion dedup against a persisted STORE: MODE=exact "
@@ -839,7 +861,6 @@ def near_dedup(ctx: StageContext):
 )
 def incremental_dedup_task(ctx: StageContext):
     import os
-    import shutil
 
     from xetl_spark.operators.dedup import (
         incremental_exact_dedup,
@@ -869,23 +890,10 @@ def incremental_dedup_task(ctx: StageContext):
         raise ValueError(
             f"incremental_dedup: unknown MODE {mode!r}; valid: exact, minhash"
         )
-    # temp-dir swap (the semantic_dedup STORE pattern): the lazily
-    # returned fresh frame and the new store both read the current
-    # store files — never overwrite them in place
-    tmp = store_s.rstrip("/") + ".tmp"
-    new_store.write.mode("overwrite").parquet(tmp)
-    # localCheckpoint, not persist(): a persisted plan is still lazy
-    # lineage — cache eviction under memory pressure (or executor
-    # loss) after the swap would recompute it from the now-deleted
-    # store files, silently mis-deduping. An eager local checkpoint
-    # truncates the lineage, so nothing downstream can ever re-read
-    # the swapped path (executor loss becomes a loud job failure,
-    # never a wrong answer).
-    fresh = fresh.localCheckpoint(eager=True)
-    if os.path.isdir(store_s):
-        shutil.rmtree(store_s)
-    os.replace(tmp, store_s)
-    return fresh
+    yield fresh
+    return _swap_store(
+        store_s, lambda tmp: new_store.write.mode("overwrite").parquet(tmp), fresh
+    )
 
 
 @task(
@@ -935,22 +943,10 @@ def semantic_dedup_task(ctx: StageContext):
             df, store, centroids, vec_col, id_col,
             threshold=threshold, n_clusters=n_clusters,
         )
-        # write the updated store to a sibling temp dir, then swap —
-        # overwriting in place would clobber the very files the
-        # new_store/fresh plans still read
-        import shutil
-
-        tmp = store_s.rstrip("/") + ".tmp"
-        semdedup_save_store(new_store, centroids, tmp)
-        # fresh is returned to downstream stages; its plan must not
-        # reference the store path being swapped underneath it. An
-        # eager localCheckpoint truncates the lineage (persist() would
-        # not: eviction/executor loss recomputes from deleted files)
-        fresh = fresh.localCheckpoint(eager=True)
-        if os.path.isdir(store_s):
-            shutil.rmtree(store_s)
-        os.replace(tmp, store_s)
-        return fresh
+        yield fresh
+        return _swap_store(
+            store_s, lambda tmp: semdedup_save_store(new_store, centroids, tmp), fresh
+        )
 
     from xetl_spark.operators.similarity import semdedup
 
@@ -1239,6 +1235,7 @@ def compact(ctx: StageContext):
         return [c.strip() for c in str(v).split(",")] if v else None
 
     path = str(ctx.env["PATH"])
+    yield ctx.spark.read.parquet(path)
     n = compact_parquet(
         ctx.spark,
         path,
@@ -1418,7 +1415,6 @@ def grayscale_task(ctx: StageContext):
         from pyspark.sql import functions as F
 
         dest_s = str(dest)
-        os.makedirs(dest_s, exist_ok=True)
 
         # files are named by the id's basename stem (a/img.png → img.png),
         # so two ids sharing a filename in different directories would
@@ -1456,14 +1452,16 @@ def grayscale_task(ctx: StageContext):
         # executor-side writes (shared FS assumed, as for any sink);
         # the returned frame keeps the stats, drops the payload.
         # Stages are lazy by default, but file emission is a side
-        # effect the user asked for — persist + count forces it to run
-        # exactly once, and downstream stages read the cached stats.
+        # effect the user asked for — persist + count after the yield
+        # runs it once, and downstream stages read the cached stats.
         id_type = out.schema["id"].dataType.simpleString()
         stats = out.mapInPandas(
             write_files,
             schema=f"id {id_type}, width int, height int, mean_gray double",
-        ).persist()
-        stats.count()
+        )
+        yield stats
+        os.makedirs(dest_s, exist_ok=True)
+        stats.persist().count()
         return stats
     return out
 
@@ -1660,15 +1658,13 @@ def shard(ctx: StageContext):
     id_col = str(ctx.env["ID_COL"])
     n = int(ctx.env["SHARDS"])  # type: ignore[arg-type]
     dest = str(ctx.env["PATH"])
-    sharded = df.withColumn("shard", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n)))
     # partitionBy(shard) writes each shard to its own directory; the
     # repartition on the same key makes it one file per shard dir
-    (
-        sharded.repartition(n, "shard")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(dest)
-    )
+    sharded = df.withColumn(
+        "shard", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n))
+    ).repartition(n, "shard")
+    yield sharded
+    sharded.write.mode("overwrite").partitionBy("shard").parquet(dest)
     return ctx.spark.read.parquet(dest)
 
 
@@ -1729,7 +1725,9 @@ def expect(ctx: StageContext):
         checks.append(Q.custom("violation_where", F.expr(str(ctx.env["VIOLATION_WHERE"]))))
     if not checks:
         raise ValueError("expect: no constraints declared")
-    quality_rows = Q.quality_report(df, checks).collect()
+    report = Q.quality_report(df, checks)
+    yield report
+    quality_rows = report.collect()
     failed = [(r.check, r.n_violations) for r in quality_rows if not r.passed]
     mode = str(ctx.env["MODE"]).lower()
     if failed and mode == "fail":
@@ -1825,6 +1823,14 @@ def ivm_refresh(ctx: StageContext):
             if mm_cols
             else None
         )
+
+    def view(sums, mm):
+        out = ivm.ivm_read(sums, sum_cols)
+        if mm is not None:
+            out = out.join(ivm.minmax_read(mm, mm_cols).drop("n"), keys, "full_outer")
+        return out
+
+    yield view(sums, mm)
     new_gen = f"gen-{gen_no:06d}"
     for name, df in (("sums", sums), ("minmax", mm)):
         if df is not None:
@@ -1839,16 +1845,11 @@ def ivm_refresh(ctx: StageContext):
     for d in sorted(os.listdir(root)):
         if d.startswith("gen-") and d not in (new_gen, live_gen):
             shutil.rmtree(f"{root}/{d}", ignore_errors=True)
-    out = ivm.ivm_read(spark.read.parquet(f"{root}/{new_gen}/sums"), sum_cols)
-    if mm_cols:
-        out = out.join(
-            ivm.minmax_read(
-                spark.read.parquet(f"{root}/{new_gen}/minmax"), mm_cols
-            ).drop("n"),
-            keys,
-            "full_outer",
-        )
-    return out
+    read = spark.read.parquet
+    return view(
+        read(f"{root}/{new_gen}/sums"),
+        read(f"{root}/{new_gen}/minmax") if mm_cols else None,
+    )
 
 
 @task(
@@ -1911,6 +1912,7 @@ def vacuum_run_history_task(ctx: StageContext):
 
     keep = str(ctx.env.get("KEEP_LAST_RUNS", "")).strip()
     age = str(ctx.env.get("MAX_AGE_DAYS", "")).strip()
+    yield None
     removed = vacuum_run_history(
         ctx.spark,
         str(ctx.env["PATH"]),

@@ -13,7 +13,7 @@ from __future__ import annotations
 import logging
 import os
 import shutil
-from collections.abc import Callable
+from collections.abc import Callable, Generator
 from typing import TYPE_CHECKING, Any
 
 import yaml
@@ -27,7 +27,9 @@ if TYPE_CHECKING:
 
 log = logging.getLogger(__name__)
 
-TaskFn = Callable[["StageContext"], "DataFrame | None"]
+# A body returns its output; one that acts yields its plan first, acts
+# only after the yield, then returns its output (runner.drive_task).
+TaskFn = Callable[["StageContext"], "DataFrame | None | Generator"]
 
 
 class TaskRegistry:
@@ -170,11 +172,13 @@ def _subprocess_task_fn(
     the logger, raise on non-zero exit (runner wraps into TaskFailure →
     CLI exit code). Dataflow medium is the filesystem, exactly like the
     reference — the stage returns no DataFrame; downstream stages pick
-    the output path out of env placeholders.
+    the output path out of env placeholders. All of it runs after the
+    yield, so a dry-run runs no program.
     """
     import subprocess
 
     def fn(ctx: "StageContext"):
+        yield None
         argv_run = argv
         if recheck and shutil.which(argv[0]) is None:
             local = os.path.join(basedir, argv[0])
@@ -204,7 +208,6 @@ def _subprocess_task_fn(
         ret = proc.wait()
         if ret != 0:
             raise RuntimeError(f"subprocess task exited with code {ret}")
-        return None
 
     return fn
 
@@ -219,7 +222,8 @@ def task(
     registry: TaskRegistry = BUILTINS,
     tests: list | None = None,
 ) -> Callable[[TaskFn], TaskFn]:
-    """Decorator: register a Python transform as a named task.
+    """Decorator: register a Python transform as a named task; a body
+    that acts yields its plan first and acts after the yield (TaskFn).
 
     ``tests`` ships golden task-level cases (env + verify_sql) with the
     task itself — run via ``run_task_tests`` / the CLI's

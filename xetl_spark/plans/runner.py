@@ -17,6 +17,7 @@ argv/env dumps.
 
 from __future__ import annotations
 
+import inspect
 import logging
 import re
 from dataclasses import dataclass, field
@@ -41,12 +42,6 @@ log = logging.getLogger("xetl_spark.runner")
 # commands carry only task inputs; these are the Spark-runner extensions
 # for materialization, DAG scheduling, and retry policy).
 RESERVED_ENV = frozenset({"MATERIALIZE", "DEPENDS_ON", "RETRIES", "RETRY_BACKOFF_S"})
-
-# Built-in tasks whose effect is writing their input out: a dry-run
-# explains that input instead of calling them, so it writes nothing.
-SINK_TASKS = frozenset(
-    {"write_parquet", "write_csv", "write_json", "write_avro", "save_table"}
-)
 
 
 class TaskFailure(RuntimeError):
@@ -117,6 +112,26 @@ class StageResult:
     bytes: int | None = None  # materialized stages only (on-disk size)
     output_path: str | None = None
     schema: str | None = None
+
+
+def drive_task(fn: Any, ctx: Any, commit: bool = True) -> tuple[DataFrame | None, bool]:
+    """Run a task body through its commit to its return value, or with
+    ``commit=False`` only to its yield (the plan). Returns ``(output,
+    acts)``; ``acts`` is whether the body reached a yield."""
+    body = fn(ctx)
+    if not inspect.isgenerator(body):
+        return body, False
+    acts = False
+    try:
+        plan = next(body)
+        acts = True
+        if not commit:
+            body.close()
+            return plan, acts
+        next(body)
+    except StopIteration as done:
+        return done.value, acts
+    raise RuntimeError(f"task body {fn!r} yielded more than once")
 
 
 def _filter_commands(job: Job, commands: str | list[str] | None) -> list[Command]:
@@ -214,9 +229,6 @@ def _execute_stage(
     # a flaky source listing) are the target.
     max_attempts = 1 + max(0, int(env.get("RETRIES", 0) or 0))
     backoff = float(env.get("RETRY_BACKOFF_S", 0) or 0)
-    rows = nbytes = None
-    path = None
-    out = None
     for attempt in range(1, max_attempts + 1):
         ctx = StageContext(
             spark=spark, job=job, command=cmd, env=env, outputs=outputs, previous=previous
@@ -224,7 +236,7 @@ def _execute_stage(
         rows = nbytes = None
         path = None
         try:
-            out = fn(ctx)
+            out, _ = drive_task(fn, ctx)
             # per-stage materialization knob (reference parity: every
             # command materialized files; here it's opt-in — default
             # lazy so Catalyst fuses across stages, SURVEY.md §4.2)
@@ -273,29 +285,24 @@ def _prepare(
     job: Job,
     commands: str | list[str] | None,
     registry: TaskRegistry | None,
+    warn: bool = True,
 ) -> list[tuple[Command, Any, Any, dict[str, EnvValue]]]:
-    """Shared preamble: discover tasks, filter commands, data-dir
-    guard, fail-fast pre-validation of EVERY selected command
-    (reference job.py:175-200)."""
+    """Shared by run_job and explain_job: discover tasks, filter
+    commands, fail-fast pre-validation of EVERY selected command
+    (reference job.py:175-200); ``warn`` logs unknown inputs."""
     reg = (registry or BUILTINS).copy()
     if job.tasks:
         reg.discover(job.tasks)
 
     selected = _filter_commands(job, commands)
-
-    if job.data:
-        import os
-
-        if not os.path.isdir(job.data):
-            raise JobDataDirectoryNotFound(job.data)
-
     plan: list[tuple[Command, Any, Any, dict[str, EnvValue]]] = []
     for cmd in selected:
         spec, fn = reg.get(cmd.task)
         env = spec.apply_defaults(cmd.env)
         declared = {k for k in env if k not in RESERVED_ENV}
         for warning in spec.validate_inputs({k: env[k] for k in declared}):
-            log.warning(warning)
+            if warn:
+                log.warning(warning)
         plan.append((cmd, spec, fn, env))
     return plan
 
@@ -387,8 +394,8 @@ def run_job(
 ) -> list[StageResult]:
     """Execute the job with fail-fast validation.
 
-    Execution order mirrors the reference (job.py:175-207): discover
-    tasks → data-dir guard → validate every selected command against
+    Execution order mirrors the reference (job.py:175-207): data-dir
+    guard → discover tasks → validate every selected command against
     its task's env interface BEFORE running anything → execution;
     skip:true stages are not executed but their (already-resolved) env
     stays referenceable.
@@ -417,12 +424,15 @@ def run_job(
     searched. Under the implicit chain that is the predecessor's output.
     """
     import contextvars
+    import os
     from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 
     from pyspark.util import inheritable_thread_target
 
     from xetl_spark.plans.logctx import Scope, log_scope
 
+    if job.data and not os.path.isdir(job.data):
+        raise JobDataDirectoryNotFound(job.data)
     plan = _prepare(job, commands, registry)
     deps = stage_dependencies(job, plan)
     results: dict[int, StageResult] = {}
@@ -661,7 +671,7 @@ def run_task_tests(
                 spark=spark, job=Job(name="__tests__"), command=dummy, env=env
             )
             try:
-                out = fn(ctx)
+                out, _ = drive_task(fn, ctx)
                 if out is None:
                     outcomes.append(False)
                     continue
@@ -678,23 +688,21 @@ def run_task_tests(
 def explain_job(
     spark: SparkSession,
     job: Job,
+    commands: str | list[str] | None = None,
     registry: TaskRegistry | None = None,
 ) -> str:
     """Dry-run as EXPLAIN: the fully-resolved manifest plus each
     stage's logical/physical plan (reference dry-run parity,
-    job.py:160-171 + task.py:312-317). A skip:true stage is listed but
-    not called, and each stage explains the same ``previous`` input
-    run_job would give it. A SINK_TASKS stage shows its input's plan
-    and writes nothing; every other task body is called to
-    build its plan, so one that runs an action while planning (a model
-    fit, a gate count, a state-store update) still runs it."""
-    reg = (registry or BUILTINS).copy()
-    if job.tasks:
-        reg.discover(job.tasks)
-    plan = []
-    for cmd in job.commands:
-        spec, fn = reg.get(cmd.task)
-        plan.append((cmd, spec, fn, spec.apply_defaults(cmd.env)))
+    job.py:160-171 + task.py:312-317). Stages are prepared as in
+    run_job, minus the data-dir guard; a skip:true stage is listed but
+    not called, and each stage explains the ``previous`` input run_job
+    would give it. Bodies run only to their yield, so nothing is
+    written or run; a stage that would act says so in one line.
+    Read-only actions a plan needs still run: perplexity_filter's
+    FIT_FRACTION=auto count, grayscale's stem-collision collect, and
+    the centroid and MinHash fits."""
+    # unknown-input warnings are run_job's to log, not the transcript's
+    plan = _prepare(job, commands, registry, warn=False)
     deps = stage_dependencies(job, plan)
     lines = [f"job: {job.name}", f"data: {job.data}"]
     outputs: dict[str, DataFrame] = {}
@@ -712,13 +720,15 @@ def explain_job(
             previous=_previous_output(deps, pos_outputs, i),
         )
         try:
-            out = ctx.input_df() if spec.name in SINK_TASKS else fn(ctx)
+            out, acts = drive_task(fn, ctx, commit=False)
         except Exception as exc:
             lines.append(f"  (plan unavailable: {exc})")
             continue
+        if acts:
+            lines.append("  (acts after its plan: not run in a dry-run)")
         if out is not None:
             try:
-                plan = out._jdf.queryExecution().simpleString().strip()
+                text = out._jdf.queryExecution().simpleString().strip()
             except Exception:
                 # Spark Connect DataFrames have no _jdf; capture the
                 # portable explain() output instead
@@ -728,8 +738,8 @@ def explain_job(
                 buf = io.StringIO()
                 with contextlib.redirect_stdout(buf):
                     out.explain()
-                plan = buf.getvalue().strip()
-            lines.append("  " + plan)
+                text = buf.getvalue().strip()
+            lines.append("  " + text)
             # column provenance rides the same analyzed plan the
             # explain used — still zero execution
             try:

@@ -68,12 +68,17 @@ def profile(spark, action: Callable[[], Any]) -> Profile:
 
 
 def crossing_ms(spark) -> int:
-    """Best-of-3 wall (ms) of a fixed 32-task identity ``mapInPandas``
-    round trip, after one priming run (worker and Arrow channel init):
-    the JVM↔Python crossing regime. It is bimodal on a shared host
-    (~100 ms fast, ~400 ms+ slow), and mapInPandas-heavy timings are
-    comparable only within one regime."""
-    probe = spark.range(0, 256).repartition(32).mapInPandas(lambda it: it, schema="id long")
+    """Best-of-3 wall (ms) of an identity ``mapInPandas`` round trip
+    with one task per core (``defaultParallelism``), after one priming
+    run (worker and Arrow channel init): the JVM↔Python crossing
+    regime. One task per core keeps the probe in one wave, so it times
+    the crossing rather than the number of task waves. On a 4-vCPU
+    host it read 238-574 ms over four probes of one session, where a
+    fixed 32-task probe (8 waves) read 1.6-3.5 s. The reading moves
+    with host load, so mapInPandas-heavy timings are comparable only
+    at similar readings."""
+    n = spark.sparkContext.defaultParallelism
+    probe = spark.range(0, 256).repartition(n).mapInPandas(lambda it: it, schema="id long")
     probe.count()
     best = float("inf")
     for _ in range(3):
