@@ -264,15 +264,10 @@ def test_sql_string_operators_quote_backtick_column_names(spark, docs):
     assert rows(shingles(odd, txt, did)) == rows(shingles(docs, "text", "doc_id"))
     fps = simhash_rowwise(docs, "text", "doc_id")
     assert rows(simhash_rowwise(odd, txt, did)) == rows(fps)
-    assert rows(c4_line_filter(odd, txt, did, min_sentences=0)) == rows(
-        c4_line_filter(docs, "text", "doc_id", min_sentences=0)
+    assert rows(c4_line_filter(odd, txt, min_sentences=0)) == rows(
+        c4_line_filter(docs, "text", min_sentences=0)
     )
-    # the id column also names a field of a DDL schema string
-    for id_name in (did, "doc id"):
-        odd_id = odd.withColumnRenamed(did, id_name)
-        assert rows(repetition_signals(odd_id, txt, id_name)) == rows(
-            repetition_signals(docs, "text", "doc_id")
-        )
+    assert rows(repetition_signals(odd, txt)) == rows(repetition_signals(docs, "text"))
     odd_fps = fps.select(F.col("doc").alias(did), F.col("simhash").alias(fp))
     near = rows(hamming_near_pairs(fps, "simhash", "doc"))
     assert (0, 1, 0) in near
@@ -570,7 +565,7 @@ def test_repetition_signals_hand_computed(spark):
     )
     got = {
         r["doc_id"]: r.asDict()
-        for r in repetition_signals(df, "text", "doc_id").collect()
+        for r in repetition_signals(df, "text").collect()
     }
     d1 = got[1]
     assert (d1["n_tokens"], d1["total_chars"]) == (8, 35)
@@ -596,7 +591,7 @@ def test_repetition_signals_hand_computed(spark):
     assert all(
         d3[k] == 0
         for k in d3
-        if k != "doc_id" and not k.endswith("_frac")
+        if k not in ("doc_id", "text") and not k.endswith("_frac")
     )
     assert d3["dup_line_frac"] == 0.0
     d4 = got[4]
@@ -625,6 +620,9 @@ def test_ensure_parallelism_max_partitions_cap(spark):
     assert down.rdd.getNumPartitions() == 16
     plan = down._jdf.queryExecution().executedPlan().toString()
     # exactly the upstream repartition's exchange — coalesce adds none
+    # (run `wide` too, so both AQE plans print in their final form:
+    # ensure_parallelism reads its input's plan without running it)
+    wide.collect()
     assert plan.count("Exchange") == wide._jdf.queryExecution().executedPlan().toString().count("Exchange")
     assert sorted(r.id for r in down.collect()) == list(range(1000))
     # uncapped already-parallel input: the guard wins, untouched
@@ -646,7 +644,7 @@ def test_repetition_signals_shuffle_free(spark):
         [(i, f"w{i} w{i+1} w{i} w{i+1}") for i in range(50)],
         "doc_id long, text string",
     )
-    out = repetition_signals(df, "text", "doc_id")
+    out = repetition_signals(df, "text")
     out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
@@ -685,7 +683,7 @@ def test_repetition_signals_matches_python_reference(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {
         r["doc_id"]: r.asDict()
-        for r in repetition_signals(df, "text", "doc_id").collect()
+        for r in repetition_signals(df, "text").collect()
     }
 
     def ref(textv: str | None) -> dict:
@@ -746,7 +744,7 @@ def test_c4_line_filter_rules(spark):
     )
     got = {
         r["doc_id"]: r.asDict()
-        for r in c4_line_filter(df, "text", "doc_id").collect()
+        for r in c4_line_filter(df, "text").collect()
     }
     # doc 1: two kept lines (middle has no terminal punct), 2 sentences
     assert got[1]["n_lines"] == 3 and got[1]["kept_lines"] == 2
@@ -771,7 +769,7 @@ def test_c4_line_filter_shuffle_free(spark):
         [(i, "A fine sentence here.\nshort.") for i in range(20)],
         "doc_id long, text string",
     )
-    out = c4_line_filter(df, "text", "doc_id")
+    out = c4_line_filter(df, "text")
     out.collect()
     assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
 
@@ -2037,7 +2035,7 @@ def test_char_entropy_reference(spark):
 
     rows = [(1, "aaaa"), (2, "abab"), (3, "abcd"), (4, ""), (5, None)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc: (r.n_chars, r.entropy) for r in char_entropy(df, "text", "doc_id").collect()}
+    got = {r.doc_id: (r.n_chars, r.entropy) for r in char_entropy(df, "text").collect()}
     assert got[1] == (4, 0.0)  # single repeated char
     assert abs(got[2][1] - math.log(2)) < 1e-12  # two equiprobable chars
     assert abs(got[3][1] - math.log(4)) < 1e-12  # uniform over 4
@@ -2060,7 +2058,7 @@ def test_view_reanalysis_does_not_explode_signal_plans(spark):
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
-    rep = repetition_signals(docs, "text", "doc_id")
+    rep = repetition_signals(docs, "text")
     rep.createOrReplaceTempView("__rep_guard")
     plan = (
         spark.sql(
@@ -2074,7 +2072,7 @@ def test_view_reanalysis_does_not_explode_signal_plans(spark):
     )
     assert plan.count("regexp_replace") < 40, plan.count("regexp_replace")
 
-    ent = char_entropy(docs, "text", "doc_id")
+    ent = char_entropy(docs, "text")
     ent.createOrReplaceTempView("__ent_guard")
     plan2 = (
         spark.sql("select * from __ent_guard where entropy > 0")

@@ -683,7 +683,7 @@ def test_media_quality_audio_branches(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"doc_id": list(rows), "media": list(rows.values())})
     )
-    got = {r.id: r for r in media_quality(df).collect()}
+    got = {r.doc_id: r for r in media_quality(df).collect()}
     assert (got[1].container, got[1].codec, got[1].quality) == ("mp3", "mp3", 100)
     assert got[2].quality == 20 and got[3].quality == 13
     assert (got[4].codec, got[4].quality, got[4].lossless) == ("flac", 100, True)

@@ -1,5 +1,6 @@
 """qtime's slope rule: between two scale factors, a layer whose ratio
-exceeds the data ratio (beyond qtime.MARGIN) is flagged. No Spark."""
+exceeds the data ratio (beyond qtime.MARGIN) is flagged (no Spark), and
+the data ratio's row counts follow the tables a plan reads."""
 
 from __future__ import annotations
 
@@ -61,3 +62,21 @@ def test_no_ratio_without_a_base_and_no_flag_without_growth():
     # equal inputs (documents stay at 500 rows from sf0.001 to sf0.01):
     # a ratio between two same-size runs is noise, never a flag
     assert not any(f for _, f in slopes(small | {"wall_s": 1.0}, big, 1.0).values())
+
+
+def test_input_rows_reads_tables_under_a_cached_subtree(spark, sf_dir):
+    """A persisted documents-only frame counts only `documents` (its
+    inputFiles stop at the InMemoryRelation); a frame over a
+    checkpoint has no known data size."""
+    import pyarrow.dataset as ds
+
+    from qtime import input_rows
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").persist()
+    try:
+        docs.count()
+        n_docs = ds.dataset(f"{sf_dir}/documents.parquet").count_rows()
+        assert input_rows(docs.select("doc_id", "text"), sf_dir) == n_docs
+        assert input_rows(docs.localCheckpoint(eager=True).select("doc_id"), sf_dir) is None
+    finally:
+        docs.unpersist()

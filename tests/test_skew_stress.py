@@ -87,8 +87,8 @@ def test_no_window_partitioning_in_text_operators(spark):
         lambda: remove_duplicate_spans_exact(df, "text", "doc_id", k_tokens=4),
         lambda: natural_boundary_dedup(df, "text", "doc_id"),
         lambda: line_dedup(df, "text", "doc_id", line_tokens=4),
-        lambda: repetition_signals(df, "text", "doc_id"),
-        lambda: char_entropy(df, "text", "doc_id"),
+        lambda: repetition_signals(df, "text"),
+        lambda: char_entropy(df, "text"),
     ]
     for build in builders:
         out = build()

@@ -16,8 +16,9 @@ wall, executor CPU-s, shuffle-write MB, spill MB, max task
 shuffle-read MB — then one row per completed stage. From the second SF
 on, each total carries its ratio to the previous SF, and the input
 rows the data ratio: parquet footer row counts of the fixture tables
-the query reads (``df.inputFiles``; every table when the plan names
-none). A ratio above the data ratio by more than ``MARGIN`` is bold
+the query reads (from its analyzed plan, so a cached subtree still
+counts its own tables; every table when the plan names none; ``?``,
+never flagged, when part of it reads a checkpoint). A ratio above the data ratio by more than ``MARGIN`` is bold
 and listed as ``FLAG`` under the findings. With more than one SF the
 rows are printed again as one table (SCALING.md's table section).
 
@@ -84,17 +85,30 @@ def slopes(
     return out
 
 
-def input_rows(df, sf_dir: str) -> int:
+def input_rows(df, sf_dir: str) -> int | None:
     """Summed parquet footer row counts (no Spark job) of the fixture
     tables under ``sf_dir`` that ``df`` scans, or of every table there
-    when it scans none of them."""
+    when it scans none of them. The tables are read off the analyzed
+    plan, which still names the relations under a cached subtree
+    (``df.inputFiles`` stops at its InMemoryRelation). None when part
+    of the plan reads a checkpoint: its source tables are unknown."""
     import pyarrow.dataset as ds
 
     root = Path(sf_dir).resolve()
     tables = set()
-    for f in df.inputFiles():
-        p = Path(urlparse(f).path).resolve()
-        tables.update(q for q in (p, *p.parents) if q.parent == root)
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "LogicalRDD" and node.rdd().isCheckpointed():
+            return None
+        rel = node.relation() if name == "LogicalRelation" else None
+        if rel is not None and rel.getClass().getSimpleName() == "HadoopFsRelation":
+            for f in rel.location().inputFiles():
+                p = Path(urlparse(f).path).resolve()
+                tables.update(q for q in (p, *p.parents) if q.parent == root)
+        for seq in (node.children(), node.subqueries()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
     return sum(ds.dataset(str(q)).count_rows() for q in tables or root.glob("*.parquet"))
 
 
@@ -214,12 +228,16 @@ def main() -> int:
                 incomplete = True
                 break
             rows, t = input_rows(best.result, sf), totals(best)
+            shown = "?" if rows is None else f"{rows:,}"
             if prev is None:
-                cells = [f"{rows:,}"] + [fmt(t[k]) for k in LAYERS]
+                cells = [shown] + [fmt(t[k]) for k in LAYERS]
             else:
-                data_ratio = rows / prev[0]
-                sl = slopes(prev[1], t, data_ratio)
-                cells = [f"{rows:,} (x{data_ratio:.1f})"] + [fmt(t[k], *sl[k]) for k in LAYERS]
+                data_ratio = rows / prev[0] if rows and prev[0] else None
+                # an unknown data ratio shows layer ratios, never a FLAG
+                sl = slopes(prev[1], t, data_ratio or 1.0)
+                if data_ratio is not None:
+                    shown += f" (x{data_ratio:.1f})"
+                cells = [shown] + [fmt(t[k], *sl[k]) for k in LAYERS]
                 if flagged := ", ".join(k for k in LAYERS if sl[k][1]):
                     findings.append(f"FLAG {name} @ {sf}: {flagged} above data x{data_ratio:.1f}")
             table.append(f"| {name} | {Path(sf).name} | " + " | ".join(cells) + " |")

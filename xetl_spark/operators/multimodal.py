@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from xetl_spark.operators.util import sql_ident, struct_udf
+
 MEDIA_META_SCHEMA = T.StructType(
     [
         T.StructField("byte_len", T.LongType()),
@@ -883,14 +885,12 @@ def extract_document_text(
 
 
 MEDIA_QUALITY_SCHEMA = (
-    "id long, container string, codec string, width int, height int, "
+    "container string, codec string, width int, height int, "
     "quality int, lossless boolean, err string"
 )
 
 
-def media_quality(
-    df: DataFrame, media_col: str = "media", id_col: str = "doc_id"
-) -> DataFrame:
+def media_quality(df: DataFrame, media_col: str = "media") -> DataFrame:
     """ONE compression-quality column across every supported media
     container — the ranking/thresholding signal a crawl-scale
     curation pass filters on before any pixel work.
@@ -917,7 +917,10 @@ def media_quality(
     oracles reproduce it exactly (no float rounding ties).
     Unknown containers or streams whose first frame is undecodable get
     quality NULL with a per-row ``err`` — triage degrades, never
-    fails the stage. Arrow-batched mapInPandas, executor-side."""
+    fails the stage. Appends the MEDIA_QUALITY_SCHEMA columns to every
+    input row, replacing same-named input columns. One Arrow-batched
+    scalar pandas UDF, executor-side: only the media column crosses
+    into Python."""
 
     def _jpeg_dims(payload: bytes):
         import struct as _st
@@ -1088,26 +1091,21 @@ def media_quality(
                     p["width"], p["height"], None, None)
         raise ValueError("unrecognized media container")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                try:
-                    c, codec, w, h, q, lossless = one(bytes(row[media_col]))
-                    rows.append((row[id_col], c, codec, w, h, q, lossless, None))
-                except Exception as e:  # noqa: BLE001 — per-row triage
-                    rows.append(
-                        (row[id_col], None, None, None, None, None, None,
-                         f"{type(e).__name__}: {e}"[:200])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "container", "codec", "width", "height",
-                    "quality", "lossless", "err",
-                ],
-            )
+    def scored(payload):
+        try:
+            return (*one(bytes(payload)), None)
+        except Exception as e:  # noqa: BLE001 — per-row triage
+            return (None,) * 6 + (f"{type(e).__name__}: {e}"[:200],)
 
-    return df.select(id_col, media_col).mapInPandas(
-        run, schema=_id_typed(df, id_col, MEDIA_QUALITY_SCHEMA)
+    names = [f.split(" ")[0] for f in MEDIA_QUALITY_SCHEMA.split(", ")]
+
+    def _media_quality(payloads):
+        return pd.DataFrame([scored(p) for p in payloads], columns=names)
+
+    udf = struct_udf(_media_quality, MEDIA_QUALITY_SCHEMA)
+    q = F.col("__mq")
+    return (
+        df.withColumn("__mq", udf(F.col(sql_ident(media_col))))
+        .withColumns({name: q[name] for name in names})
+        .drop("__mq")
     )

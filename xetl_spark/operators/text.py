@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from xetl_spark.operators.util import ensure_parallelism, sql_ident
+from xetl_spark.operators.util import ensure_parallelism, sql_ident, struct_udf
 
 # tiny public stopword seed lists (heuristic language ID, not a model)
 # Seed stopword tables for the stopword-vote language ID and the
@@ -296,12 +296,13 @@ def flesch_multilang(
     )
 
 
-def char_entropy(df, text_col: str, id_col: str):
+def char_entropy(df, text_col: str):
     """Per-document Shannon entropy of the character distribution (in
     nats) — the classic garbled-text gate (near-zero for repeated-char
     junk, anomalously high for random bytes; RedPajama/Dolma-style
-    pipelines bound it from both sides). Returns (doc, n_chars,
-    entropy), entropy 0.0 for empty text.
+    pipelines bound it from both sides). Appends ``n_chars`` and
+    ``entropy`` (replacing same-named input columns), entropy 0.0 for
+    empty text.
 
     H = ln N − (Σᵢ nᵢ·ln nᵢ)/N over per-char run counts nᵢ, computed
     SHUFFLE-FREE: sort the doc's char array (runs of equal elements
@@ -322,8 +323,6 @@ def char_entropy(df, text_col: str, id_col: str):
     Characters are JVM UTF-16 code units (= code points below the
     astral planes); astral-heavy corpora should normalize first
     (operators/encoding.py)."""
-    from xetl_spark.operators.util import ensure_parallelism
-
     def _st(prev, cnt, acc):
         return F.struct(prev.alias("prev"), cnt.alias("cnt"), acc.alias("acc"))
 
@@ -348,19 +347,17 @@ def char_entropy(df, text_col: str, id_col: str):
         lambda st: st["acc"]
         + F.when(st["cnt"] > 0, _nlogn(st["cnt"])).otherwise(F.lit(0.0)),
     )
-    base = ensure_parallelism(df).select(
-        F.col(id_col).alias("doc"),
-        F.size(cs).alias("n_chars"),
-        sum_nlogn.alias("__s"),
+    base = ensure_parallelism(df).withColumns(
+        {"__ent_n": F.size(cs), "__ent_s": sum_nlogn}
     )
-    n = F.col("n_chars")
-    return base.select(
-        "doc",
-        "n_chars",
-        F.when(n > 0, F.log(n.cast("double")) - F.col("__s") / n)
-        .otherwise(F.lit(0.0))
-        .alias("entropy"),
-    )
+    n = F.col("__ent_n")
+    return base.withColumns(
+        {
+            "n_chars": n,
+            "entropy": F.when(n > 0, F.log(n.cast("double")) - F.col("__ent_s") / n)
+            .otherwise(F.lit(0.0)),
+        }
+    ).drop("__ent_n", "__ent_s")
 
 
 def language_id(text: Column | str) -> Column:
@@ -537,7 +534,6 @@ def repetition_score(text: Column | str, n: int = 3) -> Column:
 def repetition_signals(
     df,
     text_col: str,
-    id_col: str,
     top_ns: tuple[int, ...] = (2, 3, 4),
     dup_ns: tuple[int, ...] = (5, 6, 7, 8),
 ):
@@ -570,32 +566,32 @@ def repetition_signals(
       needed).
     - NULL text gives NULL signals, except ``total_chars`` = 0.
 
-    Returns integer coverage columns plus convenience ``*_frac``
-    doubles (0.0 on empty denominators). Integers hash exactly across
-    engines; fractions are derived, never the comparison surface.
+    Appends the integer coverage columns plus convenience ``*_frac``
+    doubles (0.0 on empty denominators) to ``df``, replacing
+    same-named input columns. Integers hash exactly across engines;
+    fractions are derived, never the comparison surface.
 
-    100 TB plan shape: ZERO shuffles — one Arrow-batched
-    ``mapInPandas`` map stage computing every integer signal per
-    document with plain Counters, no skew surface at all (hot grams
-    are per-document, never cross-partition keys). Batch code beats
-    interpreted expression chains here (guide §4.2): a pure-Catalyst
-    form needs 8 per-doc array_sorts plus interpreted run-length
-    ``aggregate`` lambdas, measured 1.85s vs 0.62s for this pass at
-    sf0.1.
+    100 TB plan shape: ZERO shuffles — one Arrow-batched scalar pandas
+    UDF (only the text column crosses into Python) computing every
+    integer signal per document with plain Counters, no skew surface
+    at all (hot grams are per-document, never cross-partition keys).
+    Batch code beats interpreted expression chains here (guide §4.2):
+    a pure-Catalyst form needs 8 per-doc array_sorts plus interpreted
+    run-length ``aggregate`` lambdas, measured 1.85s vs 0.62s for this
+    pass at sf0.1.
     """
     import re as _re
     from collections import Counter
 
     import pandas as pd
 
-    id_type = df.schema[id_col].dataType.simpleString()
     ints = [
         "n_tokens int", "total_chars long", "n_lines int",
         "dup_line_count int", "line_chars long", "dup_line_chars long",
         *[f"top_{n}gram_chars long" for n in top_ns],
         *[f"dup_{n}gram_chars long" for n in dup_ns],
     ]
-    schema = f"{sql_ident(id_col)} {id_type}, " + ", ".join(ints)
+    names = [c.split(" ")[0] for c in ints]
     tok_re = _re.compile(r"[^a-z0-9]+")
     ns = tuple(dict.fromkeys(tuple(top_ns) + tuple(dup_ns)))
 
@@ -649,47 +645,29 @@ def repetition_signals(
             *[per_n[n][1] for n in dup_ns],
         )
 
-    def gen(batches):
-        for pdf in batches:
-            out = [
-                (i, *_one(s))
-                for i, s in zip(pdf["__id"], pdf["__text"])
-            ]
-            yield pd.DataFrame(
-                out, columns=[id_col] + [c.split(" ")[0] for c in ints]
-            )
+    def _repetition(texts):
+        return pd.DataFrame([_one(s) for s in texts], columns=names)
 
-    # fixed input names: mapInPandas re-resolves its input columns by
-    # unquoted name, which a backtick in a user's name cannot survive
-    signals = ensure_parallelism(df).select(
-        F.col(sql_ident(id_col)).alias("__id"), F.col(sql_ident(text_col)).alias("__text")
-    ).mapInPandas(gen, schema=schema)
+    udf = struct_udf(_repetition, ", ".join(ints))
+    with_sig = ensure_parallelism(df).withColumn(
+        "__rep", udf(F.col(sql_ident(text_col)))
+    )
+    sig = F.col("__rep")
 
     def _frac(num: str, den: str) -> Column:
-        return F.when(
-            F.col(den) > 0, F.col(num) / F.col(den)
-        ).otherwise(F.lit(0.0))
+        return F.when(sig[den] > 0, sig[num] / sig[den]).otherwise(F.lit(0.0))
 
-    frac_cols = [
-        _frac("dup_line_count", "n_lines").alias("dup_line_frac"),
-        _frac("dup_line_chars", "line_chars").alias("dup_line_char_frac"),
-        *[
-            _frac(f"top_{n}gram_chars", "total_chars").alias(
-                f"top_{n}gram_char_frac"
-            )
-            for n in top_ns
-        ],
-        *[
-            _frac(f"dup_{n}gram_chars", "total_chars").alias(
-                f"dup_{n}gram_char_frac"
-            )
-            for n in dup_ns
-        ],
-    ]
-    return signals.select("*", *frac_cols)
+    cols = {name: sig[name] for name in names}
+    cols["dup_line_frac"] = _frac("dup_line_count", "n_lines")
+    cols["dup_line_char_frac"] = _frac("dup_line_chars", "line_chars")
+    for n in top_ns:
+        cols[f"top_{n}gram_char_frac"] = _frac(f"top_{n}gram_chars", "total_chars")
+    for n in dup_ns:
+        cols[f"dup_{n}gram_char_frac"] = _frac(f"dup_{n}gram_chars", "total_chars")
+    return with_sig.withColumns(cols).drop("__rep")
 
 
-def c4_line_filter(df, text_col: str, id_col: str, min_sentences: int = 5):
+def c4_line_filter(df, text_col: str, min_sentences: int = 5):
     """C4 cleaning heuristics (Raffel et al. 2020 §2.2 — the line- and
     page-level rules the original Colossal Clean Crawled Corpus was
     built with, still the baseline web-text scrub):
@@ -705,12 +683,13 @@ def c4_line_filter(df, text_col: str, id_col: str, min_sentences: int = 5):
     cleaned text; ``keep_doc`` = some line survived AND no page marker
     fired AND n_sentences >= ``min_sentences``.
 
-    Returns (id, n_lines, kept_lines, n_sentences, has_lorem,
-    has_brace, keep_doc, clean_text) — one row per input document,
-    ``clean_text`` = surviving lines joined with ``\\n``.
+    Appends (n_lines, kept_lines, n_sentences, has_lorem, has_brace,
+    keep_doc, clean_text) to every input row, replacing same-named
+    input columns; ``clean_text`` = surviving lines joined with
+    ``\\n``.
 
-    ``text_col`` and ``id_col`` are top-level column names, quoted
-    verbatim into the SQL (dots, spaces and backticks included).
+    ``text_col`` is a top-level column name, quoted verbatim into the
+    SQL (dots, spaces and backticks included).
 
     100 TB plan shape: zero shuffles — every rule is a higher-order
     expression over the document's own line array; the operator is
@@ -731,45 +710,28 @@ def c4_line_filter(df, text_col: str, id_col: str, min_sentences: int = 5):
         "AND size(split(s, '\\\\s+')) >= 3 "
         "AND NOT contains(lower(s), 'javascript'))"
     )
-    base = ensure_parallelism(df).select(
-        F.col(sql_ident(id_col)).alias("__id"),
-        F.lower(raw).contains("lorem ipsum").alias("has_lorem"),
-        raw.contains("{").alias("has_brace"),
-        F.expr(lines_sql).alias("__lines"),
-        F.expr(kept_sql).alias("__kept"),
-    )
-    clean = F.concat_ws("\n", "__kept")
-    staged = base.select(
-        "__id",
-        "has_lorem",
-        "has_brace",
-        F.size("__lines").alias("n_lines"),
-        F.size("__kept").alias("kept_lines"),
-        clean.alias("clean_text"),
-    )
-    n_sent = (
-        F.length("clean_text")
-        - F.length(F.translate("clean_text", ".!?", ""))
-    ).alias("n_sentences")
-    return staged.select(
-        F.col("__id").alias(id_col),
-        "n_lines",
-        "kept_lines",
-        n_sent,
-        "has_lorem",
-        "has_brace",
-        (
-            (F.col("kept_lines") > 0)
-            & ~F.col("has_lorem")
-            & ~F.col("has_brace")
-            & (
-                F.length("clean_text")
-                - F.length(F.translate("clean_text", ".!?", ""))
-                >= min_sentences
-            )
-        ).alias("keep_doc"),
-        "clean_text",
-    )
+    staged = ensure_parallelism(df).withColumns(
+        {"__c4_lines": F.expr(lines_sql), "__c4_kept": F.expr(kept_sql)}
+    ).withColumn("__c4_clean", F.concat_ws("\n", "__c4_kept"))
+    clean = F.col("__c4_clean")
+    n_sent = F.length(clean) - F.length(F.translate(clean, ".!?", ""))
+    has_lorem = F.lower(raw).contains("lorem ipsum")
+    has_brace = raw.contains("{")
+    kept_lines = F.size("__c4_kept")
+    return staged.withColumns(
+        {
+            "n_lines": F.size("__c4_lines"),
+            "kept_lines": kept_lines,
+            "n_sentences": n_sent,
+            "has_lorem": has_lorem,
+            "has_brace": has_brace,
+            "keep_doc": (kept_lines > 0)
+            & ~has_lorem
+            & ~has_brace
+            & (n_sent >= min_sentences),
+            "clean_text": clean,
+        }
+    ).drop("__c4_lines", "__c4_kept", "__c4_clean")
 
 
 # deliberately simple, cross-engine-portable patterns (no lookbehind):

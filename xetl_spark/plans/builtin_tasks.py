@@ -352,11 +352,11 @@ def html_to_text_task(ctx: StageContext):
     "c4_filter",
     "C4 cleaning heuristics (Raffel et al. 2020): keep lines ending in "
     "terminal punctuation with >=3 words and no 'javascript'; flag "
-    "lorem-ipsum/brace pages and a min-sentence gate. Adds counters, "
-    "keep_doc, and clean_text; KEEP_ONLY=true drops rejected docs",
+    "lorem-ipsum/brace pages and a min-sentence gate. Appends counters, "
+    "keep_doc, and clean_text to every row (same-named input columns "
+    "are replaced); KEEP_ONLY=true drops rejected docs",
     env={
         "COLUMN": {"description": "text column", "type": "string", "default": "text"},
-        "ID_COLUMN": {"description": "row-identity column", "type": "string", "default": "doc_id"},
         "MIN_SENTENCES": {"description": "page-level sentence floor", "type": "int", "default": 5},
         "KEEP_ONLY": {"description": "drop docs failing the page rules", "type": "bool", "default": False},
         "INPUT": {"description": "upstream stage name", "type": "string", "required": False},
@@ -367,39 +367,31 @@ def c4_filter_task(ctx: StageContext):
 
     from xetl_spark.operators.text import c4_line_filter
 
-    df = ctx.input_df()
-    id_col = str(ctx.env["ID_COLUMN"])
     out = c4_line_filter(
-        df,
+        ctx.input_df(),
         str(ctx.env["COLUMN"]),
-        id_col,
         min_sentences=int(ctx.env["MIN_SENTENCES"]),  # type: ignore[arg-type]
     )
-    joined = df.join(out, id_col)
     if bool(ctx.env["KEEP_ONLY"]):
-        joined = joined.filter(F.col("keep_doc"))
-    return joined
+        out = out.filter(F.col("keep_doc"))
+    return out
 
 
 @task(
     "repetition_signals",
     "Gopher-style repetition quality signals (Rae et al. 2021): "
     "duplicate-line count/char coverage and top-/duplicated-n-gram "
-    "char coverage per document, joined onto the input (shuffle-free "
-    "map stage)",
+    "char coverage per document, appended to every input row (same-"
+    "named input columns are replaced; shuffle-free map stage)",
     env={
         "COLUMN": {"description": "text column", "type": "string", "default": "text"},
-        "ID_COLUMN": {"description": "row-identity column", "type": "string", "default": "doc_id"},
         "INPUT": {"description": "upstream stage name", "type": "string", "required": False},
     },
 )
 def repetition_signals_task(ctx: StageContext):
     from xetl_spark.operators.text import repetition_signals
 
-    df = ctx.input_df()
-    id_col = str(ctx.env["ID_COLUMN"])
-    sig = repetition_signals(df, str(ctx.env["COLUMN"]), id_col)
-    return df.join(sig, id_col)
+    return repetition_signals(ctx.input_df(), str(ctx.env["COLUMN"]))
 
 
 @task(
@@ -407,11 +399,10 @@ def repetition_signals_task(ctx: StageContext):
     "Attach corpus-quality signal columns: heuristic quality score, "
     "language guess, token count, Flesch readability, Unicode script "
     "counts, char entropy — the gate inputs for threshold filtering "
-    "(pair with the sql task). All shuffle-free map work except "
-    "entropy (one id-keyed join)",
+    "(pair with the sql task), appended to every input row. All "
+    "shuffle-free map work",
     env={
         "COLUMN": {"description": "text column", "type": "string", "default": "text"},
-        "ID_COLUMN": {"description": "row-identity column", "type": "string", "default": "doc_id"},
         "SIGNALS": {
             "description": "comma list from quality,langid,tokens,readability,script,entropy",
             "type": "string",
@@ -427,7 +418,6 @@ def text_signals_task(ctx: StageContext):
 
     df = ctx.input_df()
     col = str(ctx.env["COLUMN"])
-    id_col = str(ctx.env["ID_COLUMN"])
     known = {"quality", "langid", "tokens", "readability", "script", "entropy"}
     sigs = {s.strip() for s in str(ctx.env["SIGNALS"]).split(",") if s.strip()}
     unknown = sigs - known
@@ -459,11 +449,15 @@ def text_signals_task(ctx: StageContext):
             ],
         ).drop("__s")
     if "entropy" in sigs:
-        ent = T.char_entropy(df, col, id_col).select(
-            F.col("doc").alias(id_col),
-            F.round("entropy", 6).alias("sig_entropy"),
+        # char_entropy appends n_chars/entropy: set same-named corpus
+        # columns aside meanwhile, so sig_entropy is all that is added
+        aside = {"n_chars": "__n_chars", "entropy": "__entropy"}
+        df = (
+            T.char_entropy(df.withColumnsRenamed(aside), aside.get(col, col))
+            .withColumn("sig_entropy", F.round("entropy", 6))
+            .drop("n_chars", "entropy")
+            .withColumnsRenamed({v: k for k, v in aside.items()})
         )
-        df = df.join(ent, id_col)
     return df
 
 
@@ -1678,14 +1672,15 @@ def shard(ctx: StageContext):
     },
 )
 def lineage(ctx: StageContext):
+    from xetl_spark.operators.util import local_frame
     from xetl_spark.plans.lineage import column_lineage
 
     rows = []
     for col, srcs in column_lineage(ctx.input_df()).items():
         for s, c in sorted(srcs) or [("<literal>", "")]:
             rows.append((col, s, c))
-    return ctx.spark.createDataFrame(
-        rows, "column string, source string, source_column string"
+    return local_frame(
+        ctx.spark, rows, "column string, source string, source_column string"
     )
 
 
@@ -1706,6 +1701,7 @@ def lineage(ctx: StageContext):
 )
 def expect(ctx: StageContext):
     from xetl_spark.operators import quality as Q
+    from xetl_spark.operators.util import local_frame
 
     df = ctx.input_df()
     checks = []
@@ -1739,7 +1735,8 @@ def expect(ctx: StageContext):
         logging.getLogger("xetl_spark.expect").warning(
             "expect (warn mode): %s", failed
         )
-    return ctx.spark.createDataFrame(
+    return local_frame(
+        ctx.spark,
         [(r.check, r.n_violations, r.passed) for r in quality_rows],
         "check string, n_violations long, passed boolean",
     )
@@ -1858,11 +1855,11 @@ def ivm_refresh(ctx: StageContext):
     "scale (JPEG DQT inversion, VP8/VP9 quantizer, lossless=100 for "
     "PNG/GIF/BMP/TIFF/VP8L) and optionally keep only rows at or above "
     "MIN_QUALITY. Adds container/codec/width/height/quality/lossless/"
-    "err columns; unrecognized payloads get NULL quality + err and are "
-    "dropped by a MIN_QUALITY filter",
+    "err columns to every row (same-named input columns are replaced); "
+    "unrecognized payloads get NULL quality + err and are dropped by a "
+    "MIN_QUALITY filter",
     env={
         "MEDIA_COL": {"description": "media payload column", "type": "string", "default": "media"},
-        "ID_COL": {"description": "unique id column", "type": "string", "default": "doc_id"},
         "MIN_QUALITY": {
             "description": "keep rows with quality >= this (blank = annotate only)",
             "type": "string",
@@ -1874,11 +1871,7 @@ def ivm_refresh(ctx: StageContext):
 def media_quality_task(ctx: StageContext):
     from xetl_spark.operators.multimodal import media_quality
 
-    df = ctx.input_df()
-    media_col = str(ctx.env["MEDIA_COL"])
-    id_col = str(ctx.env["ID_COL"])
-    scored = media_quality(df, media_col, id_col).withColumnRenamed("id", id_col)
-    out = df.join(scored, id_col)
+    out = media_quality(ctx.input_df(), str(ctx.env["MEDIA_COL"]))
     min_q = str(ctx.env.get("MIN_QUALITY", "")).strip()
     if min_q:
         out = out.filter(F.col("quality") >= int(min_q))
@@ -1908,6 +1901,7 @@ def vacuum_run_history_task(ctx: StageContext):
     mirrors vacuum_snapshots for CDC snapshot dirs (r12 verdict item
     8). Returns a one-row report (rows_removed) so the stage is
     auditable like any other."""
+    from xetl_spark.operators.util import local_frame
     from xetl_spark.plans.runner import vacuum_run_history
 
     keep = str(ctx.env.get("KEEP_LAST_RUNS", "")).strip()
@@ -1920,6 +1914,4 @@ def vacuum_run_history_task(ctx: StageContext):
         max_age_days=float(age) if age else None,
     )
     ctx.metrics["rows"] = removed
-    return ctx.spark.createDataFrame(
-        [(removed,)], "rows_removed long"
-    )
+    return local_frame(ctx.spark, [(removed,)], "rows_removed long")

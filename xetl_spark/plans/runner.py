@@ -541,24 +541,27 @@ def write_run_report(
     run-history sink the reference's log decorations can't provide.
     Appends, so successive runs accumulate into an auditable history;
     at cluster scale this is a tiny driver-side write (stage counts,
-    not data rows)."""
+    not data rows), built through Arrow (``local_frame``)."""
     import time
 
+    from xetl_spark.operators.util import local_frame
+
+    finished_at = float(time.time())
     rows = [
-        {
-            "job": report.get("job"),
-            "finished_at": float(time.time()),
-            "total_wall_s": float(report.get("total_wall_s") or 0.0),
-            "stage": s["name"],
-            "task": s["task"],
-            "status": s["status"],
-            "wall_s": float(s["wall_s"] or 0.0),
-            "attempts": int(s.get("attempts") or 1),
-            "rows": s["rows"],
-            "bytes": s["bytes"],
-            "output_path": s["output_path"],
-            "schema": s["schema"],
-        }
+        (
+            report.get("job"),
+            finished_at,
+            float(report.get("total_wall_s") or 0.0),
+            s["name"],
+            s["task"],
+            s["status"],
+            float(s["wall_s"] or 0.0),
+            int(s.get("attempts") or 1),
+            s["rows"],
+            s["bytes"],
+            s["output_path"],
+            s["schema"],
+        )
         for s in report["stages"]
     ]
     from pyspark.sql.types import (
@@ -585,7 +588,7 @@ def write_run_report(
             StructField("schema", StringType()),
         ]
     )
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(path)
+    local_frame(spark, rows, schema).coalesce(1).write.mode("append").parquet(path)
     return spark.read.parquet(path)
 
 

@@ -325,11 +325,11 @@ def q_text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-family repetition quality signals (operators/text.py
     repetition_signals): duplicate-line count/char coverage plus
     top-{2,3,4}-gram and duplicated-{5..8}-gram character coverage per
-    document — shuffle-free (one Arrow-batched mapInPandas map stage
+    document — shuffle-free (one Arrow-batched scalar pandas UDF
     counting per document), integer outputs for exact cross-engine
     hashing."""
     (docs,) = load(spark, sf_dir, "documents")
-    out = text.repetition_signals(docs, "text", "doc_id")
+    out = text.repetition_signals(docs, "text")
     ints = [
         "n_tokens", "total_chars", "n_lines", "dup_line_count",
         "line_chars", "dup_line_chars",
@@ -478,9 +478,7 @@ def q_text_c4_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("doc_id") % 11 == 0, F.lit("var x = { a: 1 };"))
         .otherwise(F.lit("")),
     )
-    out = text.c4_line_filter(
-        docs.select("doc_id", aug.alias("text")), "text", "doc_id"
-    )
+    out = text.c4_line_filter(docs.select("doc_id", aug.alias("text")), "text")
     return out.select(
         "doc_id",
         F.col("n_lines").cast("long").alias("n_lines"),
@@ -4766,9 +4764,9 @@ def q_text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xetl_spark.operators.text import char_entropy
 
     (docs,) = load(spark, sf_dir, "documents")
-    out = char_entropy(docs.where(F.col("doc_id") < 400), "text", "doc_id")
+    out = char_entropy(docs.where(F.col("doc_id") < 400), "text")
     return out.select(
-        F.col("doc").alias("doc_id"),
+        "doc_id",
         "n_chars",
         F.round("entropy", 6).alias("entropy"),
     )
@@ -5731,8 +5729,7 @@ def q_media_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = ids.mapInPandas(build, schema="doc_id long, media binary")
     return media_quality(media).select(
-        F.col("id").alias("doc_id"),
-        "container", "codec", "width", "height", "quality", "lossless",
+        "doc_id", "container", "codec", "width", "height", "quality", "lossless",
     )
 
 
@@ -5807,8 +5804,7 @@ def q_media_quality_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = ids.mapInPandas(build, schema="doc_id long, media binary")
     return media_quality(media).select(
-        F.col("id").alias("doc_id"),
-        "container", "codec", "width", "height", "quality", "lossless",
+        "doc_id", "container", "codec", "width", "height", "quality", "lossless",
     )
 
 

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xetl_spark.operators.util import local_frame
+
 
 def _parquet_files(path: str) -> list[str]:
     out = []
@@ -55,7 +57,7 @@ def build_manifest(spark: SparkSession, path: str, column: str) -> DataFrame:
     field = pq.ParquetFile(files[0]).schema_arrow.field(column)
     vtype = from_arrow_type(field.type).simpleString()
 
-    fdf = spark.createDataFrame([(f,) for f in files], "path string").repartition(
+    fdf = local_frame(spark, [(f,) for f in files], "path string").repartition(
         min(len(files), 64)
     )
 
