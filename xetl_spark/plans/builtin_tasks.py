@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from xetl_spark.plans.registry import task
 from xetl_spark.plans.runner import StageContext
+from xetl_spark.sources import io as source_io
 from xetl_spark.sources.io import read_any, write_any
 
 _PATH = {"PATH": {"description": "file/directory URI", "type": "string"}}
@@ -30,7 +31,7 @@ PPL_AUTO_FIT_TARGET = 100_000
 
 @task(
     "read_parquet",
-    "Scan a parquet table",
+    "Scan a parquet table (one file's schema is read from its footer on the driver)",
     env=_PATH,
     # shipped golden cases (run via --run-task-tests): source tasks can
     # self-test against the fixture corpus with no pipeline context
@@ -42,7 +43,7 @@ PPL_AUTO_FIT_TARGET = 100_000
     ],
 )
 def read_parquet(ctx: StageContext):
-    return ctx.spark.read.parquet(str(ctx.env["PATH"]))
+    return source_io.read_parquet(ctx.spark, str(ctx.env["PATH"]))
 
 
 @task(

@@ -24,6 +24,7 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from xetl_spark.plans.models import (
     Command,
@@ -42,6 +43,26 @@ log = logging.getLogger("xetl_spark.runner")
 # commands carry only task inputs; these are the Spark-runner extensions
 # for materialization, DAG scheduling, and retry policy).
 RESERVED_ENV = frozenset({"MATERIALIZE", "DEPENDS_ON", "RETRIES", "RETRY_BACKOFF_S"})
+
+# The run-history table (``write_run_report``): one row per stage of a
+# run. Its writer and both of its readers take this schema, so reading
+# the history back infers nothing.
+RUN_HISTORY_SCHEMA = T.StructType(
+    [
+        T.StructField("job", T.StringType()),
+        T.StructField("finished_at", T.DoubleType()),
+        T.StructField("total_wall_s", T.DoubleType()),
+        T.StructField("stage", T.StringType()),
+        T.StructField("task", T.StringType()),
+        T.StructField("status", T.StringType()),
+        T.StructField("wall_s", T.DoubleType()),
+        T.StructField("attempts", T.LongType()),
+        T.StructField("rows", T.LongType()),
+        T.StructField("bytes", T.LongType()),
+        T.StructField("output_path", T.StringType()),
+        T.StructField("schema", T.StringType()),
+    ]
+)
 
 
 class TaskFailure(RuntimeError):
@@ -244,7 +265,8 @@ def _execute_stage(
                 if not dest:
                     raise ValueError("MATERIALIZE=true requires a job data dir")
                 out.write.mode("overwrite").parquet(dest)
-                out = spark.read.parquet(dest)
+                # the schema just written: reading it back infers nothing
+                out = spark.read.schema(out.schema).parquet(dest)
                 rows = out.count()  # metadata-only over fresh parquet
                 nbytes = _dir_size(dest)
                 path = dest
@@ -564,32 +586,8 @@ def write_run_report(
         )
         for s in report["stages"]
     ]
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("job", StringType()),
-            StructField("finished_at", DoubleType()),
-            StructField("total_wall_s", DoubleType()),
-            StructField("stage", StringType()),
-            StructField("task", StringType()),
-            StructField("status", StringType()),
-            StructField("wall_s", DoubleType()),
-            StructField("attempts", LongType()),
-            StructField("rows", LongType()),
-            StructField("bytes", LongType()),
-            StructField("output_path", StringType()),
-            StructField("schema", StringType()),
-        ]
-    )
-    local_frame(spark, rows, schema).coalesce(1).write.mode("append").parquet(path)
-    return spark.read.parquet(path)
+    local_frame(spark, rows, RUN_HISTORY_SCHEMA).coalesce(1).write.mode("append").parquet(path)
+    return spark.read.schema(RUN_HISTORY_SCHEMA).parquet(path)
 
 
 def vacuum_run_history(
@@ -624,7 +622,7 @@ def vacuum_run_history(
     path = re.sub(r"^file://", "", path)
     if not os.path.isdir(path):
         return 0
-    df = spark.read.parquet(path)
+    df = spark.read.schema(RUN_HISTORY_SCHEMA).parquet(path)
     stamps = sorted(
         (r[0] for r in df.select("finished_at").distinct().collect()),
         reverse=True,

@@ -5,7 +5,12 @@ binary scans and sinks, URL ingest (reference `download` task), and
 streaming readers (xetl_spark.streaming).
 """
 
-from xetl_spark.sources.io import read_any, read_with_quarantine, write_any  # noqa: F401
+from xetl_spark.sources.io import (  # noqa: F401
+    read_any,
+    read_parquet,
+    read_with_quarantine,
+    write_any,
+)
 from xetl_spark.sources.url import (  # noqa: F401
     fetch_urls_distributed,
     ingest_url,

@@ -8,11 +8,84 @@ name formats declaratively, mirroring the reference's file-based tasks.
 
 from __future__ import annotations
 
+import functools
+import json
+
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 _READ_FORMATS = {"parquet", "csv", "json", "text", "orc", "binaryFile"}
 _WRITE_FORMATS = {"parquet", "csv", "json", "text", "orc"}
+# the characters that make Spark glob a path (SparkHadoopUtil.isGlobPath)
+_GLOB_CHARS = frozenset("{}[]*?\\")
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job
+    when ``path`` is one file.
+
+    Spark infers a parquet schema with a Spark job that reads one
+    footer on an executor. For a single file that footer is the file's
+    own, so its schema is read here on the driver, converted the same
+    way (``_footer_schema``), and handed to the reader. A directory, a
+    glob, a hidden file, a Connect session or a footer that cannot be
+    read or converted keeps the plain ``spark.read.parquet(path)``:
+    Spark's inference, and for a bad footer Spark's own error.
+    """
+    schema = _footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema Spark's inference job gives the single parquet file
+    ``path``, or None where ``read_parquet`` leaves inference to Spark.
+
+    Mirrors ``ParquetFileFormat.mergeSchemasInParallel`` for one file:
+    the footer without row groups, ``readSchemaFromFooter`` (Spark's
+    own schema key first, else the parquet schema), and a converter
+    built from the same settings: five read from the session, and the
+    conf defaults for case sensitivity, field-id reads and the variant
+    annotation, which the inference job does not take from the session.
+    """
+    jsession = getattr(spark, "_jsparkSession", None)  # absent under Connect
+    if jsession is None or _GLOB_CHARS.intersection(path):
+        return None
+    # one py4j lookup per class: walking jvm.org.apache... costs one per segment
+    jclass = functools.partial(getattr, spark._jvm)
+    parquet = "org.apache.spark.sql.execution.datasources.parquet."
+    try:
+        hconf = jsession.sessionState().newHadoopConf()
+        hpath = jclass("org.apache.hadoop.fs.Path")(path)
+        status = hpath.getFileSystem(hconf).getFileStatus(hpath)
+        # Spark lists no hidden file (`_x`, `.x`), even one named directly
+        hidden = jclass("org.apache.spark.util.HadoopFSUtils").shouldFilterOutPathName(
+            status.getPath().getName()
+        )
+        if hidden or not status.isFile():
+            return None
+        meta = jclass(parquet + "ParquetFooterReader").readFooter(
+            jclass("org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(status, hconf),
+            jclass("org.apache.parquet.format.converter.ParquetMetadataConverter").SKIP_ROW_GROUPS,
+        )
+        conf = jsession.sessionState().conf()
+        defaults = jclass("org.apache.spark.sql.internal.SQLConf")
+        converter = jclass(parquet + "ParquetToSparkSchemaConverter")(
+            conf.isParquetBinaryAsString(),
+            conf.isParquetINT96AsTimestamp(),
+            defaults.CASE_SENSITIVE().defaultValue().get(),
+            conf.parquetInferTimestampNTZEnabled(),
+            conf.legacyParquetNanosAsLong(),
+            defaults.PARQUET_FIELD_ID_READ_ENABLED().defaultValue().get(),
+            defaults.PARQUET_IGNORE_VARIANT_ANNOTATION().defaultValue().get(),
+            conf.parquetReaderRespectUnknownTypeAnnotation(),
+        )
+        footer = jclass("org.apache.parquet.hadoop.Footer")(status.getPath(), meta)
+        schema = jclass(parquet + "ParquetFileFormat").readSchemaFromFooter(footer, converter)
+    except Py4JJavaError:  # missing path, not parquet, unconvertible type
+        return None
+    return T.StructType.fromJson(json.loads(schema.json()))
 
 
 def read_any(

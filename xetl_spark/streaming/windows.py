@@ -18,6 +18,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xetl_spark.sources.io import read_parquet
+
 # Streaming sources never infer schemas, so the ts encoding must be
 # probed from the files themselves. Current fixtures store events.ts as
 # parquet TIMESTAMP(MICROS) (read natively as TimestampType); legacy
@@ -35,8 +37,10 @@ EVENTS_SCHEMA_NANOS = (
 
 
 def _events_ts_is_long(spark: SparkSession, sf_dir: str) -> bool:
-    """One batch footer read to learn how ts decodes on this fixture."""
-    probe = spark.read.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
+    """How ts decodes on this fixture, from events.parquet's schema:
+    one footer read on the driver (``sources.io.read_parquet``), no
+    Spark job."""
+    probe = read_parquet(spark, f"{sf_dir}/events.parquet")
     return dict(probe.dtypes).get("ts") == "bigint"
 
 
@@ -44,9 +48,9 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming scan of the events table (explicit schema — streaming
     sources never infer; maxFilesPerTrigger bounds micro-batch size).
 
-    The schema is chosen by probing the batch read of the same path, so
-    both TIMESTAMP(MICROS) and legacy TIMESTAMP(NANOS) fixtures produce
-    an identical ``ts timestamp`` column downstream.
+    The schema is chosen from events.parquet's footer, so both
+    TIMESTAMP(MICROS) and legacy TIMESTAMP(NANOS) fixtures produce an
+    identical ``ts timestamp`` column downstream.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     nanos = _events_ts_is_long(spark, sf_dir)
